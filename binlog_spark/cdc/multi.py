@@ -372,10 +372,7 @@ def table_upserts_minimal(staged: DataFrame, columns: list[str],
     present and the before image otherwise (the before/WHERE image always
     carries the pk).  Output: one row per touched key plus the patch
     metadata LakeTable.merge consumes — ``present_cols`` (csv of resolved
-    REAL column names) and ``base_{pk}`` chain-origin keys.
-
-    Callers must release the core's persisted decode after the terminal
-    action: ``cdc.pipeline.release_minimal(result)``."""
+    REAL column names) and ``base_{pk}`` chain-origin keys."""
     from .pipeline import _minimal_core, with_key_change_tombstones
 
     payload = [c for c in columns if c not in pk]
@@ -450,7 +447,6 @@ def table_upserts_minimal(staged: DataFrame, columns: list[str],
                  typed(F.element_at(barr, i + 1), k)).alias(f"base_{k}")
           for i, k in enumerate(pk)],
         *_META, "gtid", "ts_sec")
-    out._persisted_source = up._persisted_source
     return out
 
 
@@ -567,24 +563,11 @@ def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
                 batch_id=bid)
             return
         pk = list(t.key_cols)
-        if (sch, tbl) in partial_tables:
-            from .pipeline import release_minimal
-            up = table_upserts_minimal(
-                spark.read.parquet(part), info["columns"], pk,
-                info["types"], broadcast_winners=broadcast_winners,
-                wide_order=wide_order)
-            try:
-                t.merge(spark, up, batch_id=bid, offsets=offsets)
-            finally:
-                # release even when the merge raises — a retrying
-                # caller would otherwise stack one cached decode per
-                # attempt
-                release_minimal(up)
-            return
-        up = table_upserts(spark.read.parquet(part),
-                           info["columns"], pk, info["types"],
-                           broadcast_winners=broadcast_winners,
-                           wide_order=wide_order)
+        upserts = (table_upserts_minimal if (sch, tbl) in partial_tables
+                   else table_upserts)
+        up = upserts(spark.read.parquet(part), info["columns"], pk,
+                     info["types"], broadcast_winners=broadcast_winners,
+                     wide_order=wide_order)
         t.merge(spark, up, batch_id=bid, offsets=offsets)
 
     # per-table applies are independent (own lake roots, own

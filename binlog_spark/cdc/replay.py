@@ -27,7 +27,7 @@ from ..decoder.chunks import chunks_df, spans_df
 from ..decoder.kernel import decode_changes, decode_keys
 from ..lake.table import LakeTable
 from .pipeline import (flatten_extras, reduce_changes,
-                       reduce_changes_minimal, release_minimal,
+                       reduce_changes_minimal,
                        scan_extra_columns)
 
 
@@ -159,13 +159,7 @@ def replay(spark: SparkSession, dump_dir: str, table_root: str, *,
         # rather than caching the event stream — a DataFrame cache build
         # costs more than a second decode pass at scale
         metrics = write_lineage(events, table_root, bid) if lineage else {}
-        try:
-            snap = table.merge(spark, upserts, batch_id=bid,
-                               offsets=offsets)
-        finally:
-            # release even when the merge raises — a retrying caller
-            # would otherwise stack one cached decode per attempt
-            release_minimal(upserts)
+        snap = table.merge(spark, upserts, batch_id=bid, offsets=offsets)
         snap.setdefault("stats", {}).update(metrics)
         if compact_every or compact_tombstone_ratio:
             table.maybe_compact(spark, every_n_commits=compact_every,

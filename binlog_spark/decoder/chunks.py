@@ -62,6 +62,28 @@ def check_span_bounds(log_file: str, off: int, length: int) -> None:
             "1 GiB packable bound (file overran max_binlog_size)")
 
 
+def iter_chunk_bytes(batches):
+    """``(log_file, off, data)`` for every chunk row of a ``mapInArrow``
+    input: span rows (dump_dir, log_file, chunk_off, chunk_len) are read
+    from their file, blob rows (log_file, chunk_off, data) carry their
+    bytes.  Every chunk passes check_span_bounds before it is yielded."""
+    for rb in batches:
+        d = rb.to_pydict()
+        if "data" in d:
+            for log_file, off, data in zip(d["log_file"], d["chunk_off"],
+                                           d["data"]):
+                check_span_bounds(log_file, off, len(data))
+                yield log_file, off, data
+            continue
+        for dump_dir, log_file, off, ln in zip(
+                d["dump_dir"], d["log_file"], d["chunk_off"], d["chunk_len"]):
+            check_span_bounds(log_file, off, ln)
+            with open(os.path.join(dump_dir, log_file), "rb") as f:
+                f.seek(off)
+                data = f.read(ln)
+            yield log_file, off, data
+
+
 def scan_chunks(dump_dir: str, chunk_target: int = 4 << 20,
                 io_block: int = 1 << 20) -> list[tuple]:
     """Discover transaction-aligned chunk spans without a manifest by

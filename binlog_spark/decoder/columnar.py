@@ -1,264 +1,60 @@
 """Compiled columnar decode for ARBITRARY table schemas.
 
-The round-1 generic path decoded each row into Python objects
-(``decode_value`` per cell through a cursor object) and then rendered a
-canonical-JSON image per row with ``json.dumps`` — ~10× slower per core
-than the specialized repo_files kernel.  This module closes most of that
-gap by COMPILING a decoder per TABLE_MAP layout (the reference's layout
-spec is /root/reference/rbr.go:246-350 + types.go:118-304):
+Decoding each row into Python objects (``decode_value`` per cell through
+a cursor object, as the sequential oracle does) and rendering a
+canonical-JSON image per row with ``json.dumps`` runs ~10× slower per
+core than the vectorized repo_files kernel.  This module closes most of
+that gap by COMPILING a reader per rows-event layout (the reference's
+layout spec is the reference's rbr.go:246-350 + types.go:118-304):
 
-  * one closure per column, specialized on (type, meta, unsigned,
-    charset) at TABLE_MAP parse time — no per-cell type dispatch, no
-    cursor objects, plain offset arithmetic over the event body
+  * one generated function per (TABLE_MAP, columns-present bitmaps,
+    mode, op) reads every row of an event; each cell read is inline
+    source specialized on (type, meta, unsigned, charset) — no per-cell
+    type dispatch, no cursor objects, plain offset arithmetic over the
+    event body (JSON cells call one compile_column closure each)
   * values are rendered STRAIGHT to their output string form — a JSON
     fragment (mode='json', byte-identical to the sequential oracle's
     ``_image_json``) or a raw cell string (mode='vals', for the typed
     lake path) — no intermediate datetime/dict objects
   * the row image's JSON is assembled from precomputed sorted-key
-    prefixes: one string join per image
+    prefixes: one string concatenation per image
 
-Compiled readers are cached per distinct TABLE_MAP body and
-columns-present bitmap, so MySQL's re-emitted identical TABLE_MAPs cost
-one dict hit.
+decoder.generic drives these readers for arbitrary tables and for the
+chunks the vectorized kernel declines.  Compiled readers are cached per
+distinct TABLE_MAP body and columns-present bitmap, so MySQL's
+re-emitted identical TABLE_MAPs cost one dict hit.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
 import json as _json
 import struct
 
 from .. import constants as C
-from ..mysql.decode import decimal_size, decode_decimal
 
 _esc = _json.encoder.encode_basestring_ascii  # C-accelerated
 
-_EPOCH = _dt.datetime(1970, 1, 1)
-
-
-def _float_frag(v: float) -> str:
-    # json.dumps renders floats via float.__repr__ (shortest round-trip)
-    return repr(v)
-
-
-def _dt_iso(y, mo, d, h, mi, s, us) -> str:
-    if us:
-        return (f"{y:04d}-{mo:02d}-{d:02d}T{h:02d}:{mi:02d}:{s:02d}"
-                f".{us:06d}")
-    return f"{y:04d}-{mo:02d}-{d:02d}T{h:02d}:{mi:02d}:{s:02d}"
-
-
-def _frac_bytes(b, pos, meta):
-    """(value, new_pos) for a fractional-seconds suffix of DATETIME2 /
-    TIMESTAMP2 (semantics of mysql.decode._frac)."""
-    n = (meta + 1) // 2
-    if n == 0:
-        return 0, pos
-    return int.from_bytes(b[pos:pos + n], "big") * (100 ** (3 - n)), pos + n
-
 
 def compile_column(col, mode: str):
-    """One (bytes, pos) -> (fragment, new_pos) closure for a column.
+    """One (bytes, pos) -> (fragment, new_pos) closure for a column type
+    the whole-event codegen does not inline (JSON), or None for a type
+    no reader exists for.
 
     mode='json': fragment is a canonical-JSON value fragment.
     mode='vals': fragment is the raw cell string (lake-castable)."""
-    t = col.type
-    meta = col.meta
+    if col.type != C.TYPE_JSON:
+        return None
     as_json = mode == "json"
 
-    if t in (C.TYPE_VARCHAR, C.TYPE_STRING):
-        if meta < 256:
-            def rd(b, pos):
-                ln = b[pos]
-                pos += 1
-                s = str(b[pos:pos + ln], "utf-8")
-                return (_esc(s) if as_json else s), pos + ln
-        else:
-            def rd(b, pos):
-                ln = b[pos] | (b[pos + 1] << 8)
-                pos += 2
-                s = str(b[pos:pos + ln], "utf-8")
-                return (_esc(s) if as_json else s), pos + ln
-        return rd
-
-    if t in (C.TYPE_TINY, C.TYPE_SHORT, C.TYPE_INT24, C.TYPE_LONG,
-             C.TYPE_LONGLONG):
-        width = {C.TYPE_TINY: 1, C.TYPE_SHORT: 2, C.TYPE_INT24: 3,
-                 C.TYPE_LONG: 4, C.TYPE_LONGLONG: 8}[t]
-        unsigned = col.unsigned
-        half = 1 << (width * 8 - 1)
-        full = 1 << (width * 8)
-
-        def rd(b, pos, width=width, half=half, full=full,
-               unsigned=unsigned):
-            v = int.from_bytes(b[pos:pos + width], "little")
-            if not unsigned and v >= half:
-                v -= full
-            return str(v), pos + width
-        return rd
-
-    if t == C.TYPE_NEWDECIMAL:
-        precision, scale = meta & 0xFF, meta >> 8
-        size = decimal_size(precision, scale)
-
-        def rd(b, pos, size=size, precision=precision, scale=scale):
-            s = decode_decimal(bytes(b[pos:pos + size]), precision, scale)
-            return (f'"{s}"' if as_json else s), pos + size
-        return rd
-
-    if t == C.TYPE_FLOAT:
-        def rd(b, pos):
-            v = struct.unpack_from("<f", b, pos)[0]
-            return _float_frag(v), pos + 4
-        return rd
-
-    if t == C.TYPE_DOUBLE:
-        def rd(b, pos):
-            v = struct.unpack_from("<d", b, pos)[0]
-            return _float_frag(v), pos + 8
-        return rd
-
-    if t == C.TYPE_ENUM:
-        width = 1 if meta == 1 else 2
-        values = col.values
-
-        def rd(b, pos, width=width, values=values):
-            idx = int.from_bytes(b[pos:pos + width], "little")
-            if as_json:
-                if values:
-                    label = (_esc(values[idx - 1])
-                             if 0 < idx <= len(values) else '""')
-                else:
-                    label = "null"
-                return f'{{"idx": {idx}, "label": {label}}}', pos + width
-            return str(idx), pos + width
-        return rd
-
-    if t == C.TYPE_SET:
-        nbytes = meta
-        values = col.values
-
-        def rd(b, pos, nbytes=nbytes, values=values):
-            mask = int.from_bytes(b[pos:pos + nbytes], "little")
-            if as_json:
-                if values:
-                    members = "[" + ", ".join(
-                        _esc(v) for i, v in enumerate(values)
-                        if mask & (1 << i)) + "]"
-                else:
-                    members = "null"
-                return f'{{"mask": {mask}, "members": {members}}}', pos + nbytes
-            return str(mask), pos + nbytes
-        return rd
-
-    if t == C.TYPE_BIT:
-        nbits = ((meta >> 8) * 8) + (meta & 0xFF)
-        size = (nbits + 7) // 8
-
-        def rd(b, pos, size=size):
-            v = int.from_bytes(b[pos:pos + size], "big")
-            return str(v), pos + size
-        return rd
-
-    if t in (C.TYPE_BLOB, C.TYPE_GEOMETRY):
-        lw = meta
-        binary = col.charset in C.BINARY_CHARSETS
-
-        def rd(b, pos, lw=lw, binary=binary):
-            ln = int.from_bytes(b[pos:pos + lw], "little")
-            pos += lw
-            raw = bytes(b[pos:pos + ln])
-            if binary:
-                h = raw.hex()
-                frag = (f'{{"$hex": "{h}"}}' if as_json else h)
-            else:
-                s = raw.decode("utf-8", "replace")
-                frag = _esc(s) if as_json else s
-            return frag, pos + ln
-        return rd
-
-    if t == C.TYPE_JSON:
-        lw = meta
-
-        def rd(b, pos, lw=lw):
-            # direct JSONB→text render: no intermediate dict tree, no
-            # json.dumps re-walk (byte-identical output; jsonb.render_json)
-            from ..mysql.jsonb import render_json
-            ln = int.from_bytes(b[pos:pos + lw], "little")
-            pos += lw
-            s = render_json(bytes(b[pos:pos + ln]))
-            return (_esc(s) if as_json else s), pos + ln
-        return rd
-
-    if t == C.TYPE_DATE:
-        def rd(b, pos):
-            v = int.from_bytes(b[pos:pos + 3], "little")
-            if v == 0:
-                return ("null" if as_json else None), pos + 3
-            s = f"{v // 512:04d}-{v // 32 % 16:02d}-{v % 32:02d}"
-            return (f'"{s}"' if as_json else s), pos + 3
-        return rd
-
-    if t == C.TYPE_DATETIME2:
-        def rd(b, pos, meta=meta):
-            dtv = int.from_bytes(b[pos:pos + 5], "big")
-            pos += 5
-            ym = (dtv >> 22) & ((1 << 17) - 1)
-            s_ = _dt_iso(ym // 13, ym % 13, (dtv >> 17) & 31,
-                         (dtv >> 12) & 31, (dtv >> 6) & 63, dtv & 63, 0)
-            frac, pos = _frac_bytes(b, pos, meta)
-            if frac:
-                s_ = s_ + f".{frac:06d}"
-            return (f'"{s_}"' if as_json else s_), pos
-        return rd
-
-    if t == C.TYPE_TIMESTAMP2:
-        def rd(b, pos, meta=meta):
-            sec = int.from_bytes(b[pos:pos + 4], "big")
-            pos += 4
-            frac, pos = _frac_bytes(b, pos, meta)
-            dt = _EPOCH + _dt.timedelta(seconds=sec, microseconds=frac)
-            s_ = _dt_iso(dt.year, dt.month, dt.day, dt.hour, dt.minute,
-                         dt.second, dt.microsecond)
-            return (f'"{s_}"' if as_json else s_), pos
-        return rd
-
-    if t == C.TYPE_TIME2:
-        def rd(b, pos, meta=meta):
-            tv = int.from_bytes(b[pos:pos + 3], "big")
-            pos += 3
-            sign = (tv >> 23) & 1
-            hour = (tv >> 12) & ((1 << 10) - 1)
-            minute = (tv >> 6) & 63
-            sec = tv & 63
-            if sign == 0:  # negative: per-field inversion
-                hour = (~hour) & ((1 << 10) - 1)
-                minute = (~minute) & 63
-                sec = (~sec) & 63
-                n = (meta + 1) // 2
-                frac = 0
-                if n:
-                    v = int.from_bytes(b[pos:pos + n], "big")
-                    pos += n
-                    if v != 0:
-                        bits = n * 8
-                        v = ((~v) & ((1 << bits) - 1)) + 1
-                    frac = v * (100 ** (3 - n))
-                if frac == 0 and sec < 59:  # reference's "+1s" quirk
-                    sec += 1                # (/root/reference/types.go:279-281)
-            else:
-                frac, pos = _frac_bytes(b, pos, meta)
-            micros = (hour * 3600 + minute * 60 + sec) * 1_000_000 + frac
-            return str(-micros if sign == 0 else micros), pos
-        return rd
-
-    if t == C.TYPE_YEAR:
-        def rd(b, pos):
-            v = b[pos]
-            return str(0 if v == 0 else 1900 + v), pos + 1
-        return rd
-
-    return None  # unsupported type — caller falls back to decode_value
+    def rd(b, pos, lw=col.meta):
+        # direct JSONB→text render: no intermediate dict tree, no
+        # json.dumps re-walk (byte-identical output; jsonb.render_json)
+        from ..mysql.jsonb import render_json
+        ln = int.from_bytes(b[pos:pos + lw], "little")
+        pos += lw
+        s = render_json(bytes(b[pos:pos + ln]))
+        return (_esc(s) if as_json else s), pos + ln
+    return rd
 
 
 # ---------------------------------------------------------------------------
@@ -573,63 +369,6 @@ def compile_event_reader(tme, present0: bytes, present1: bytes | None,
     return env["_ev"]
 
 
-class ImageReader:
-    """Compiled reader for one (TABLE_MAP, columns-present bitmap, mode):
-    reads a row image and returns its rendered output."""
-
-    __slots__ = ("readers", "names", "prefix_idx", "nb", "mode", "ok")
-
-    def __init__(self, tme, present_cols: list[int], mode: str) -> None:
-        self.mode = mode
-        cols = [tme.columns[i] for i in present_cols]
-        self.readers = []
-        self.ok = True
-        for c in cols:
-            rd = compile_column(c, mode)
-            if rd is None:
-                self.ok = False
-                break
-            self.readers.append(rd)
-        self.names = [c.name if c.name else f"@{c.ordinal}" for c in cols]
-        # canonical JSON: keys sorted, nulls included (matches the
-        # sequential oracle's _image_json)
-        order = sorted(range(len(cols)), key=lambda i: self.names[i])
-        self.prefix_idx = []
-        for rank, i in enumerate(order):
-            # json.dumps default separators (', ', ': ') — must match the
-            # sequential oracle's _image_json byte-for-byte
-            head = "{" if rank == 0 else ", "
-            self.prefix_idx.append((f'{head}{_esc(self.names[i])}: ', i))
-        self.nb = (len(cols) + 7) // 8
-
-    def read(self, b, pos):
-        """(rendered, new_pos): rendered is a JSON object string
-        (mode='json') or a list of cell strings (mode='vals')."""
-        nb = self.nb
-        nm = int.from_bytes(b[pos:pos + nb], "little")
-        pos += nb
-        vals = []
-        ap = vals.append
-        if self.mode == "json":
-            for i, rd in enumerate(self.readers):
-                if (nm >> i) & 1:
-                    ap("null")
-                else:
-                    frag, pos = rd(b, pos)
-                    ap("null" if frag is None else frag)
-            if not self.prefix_idx:
-                return "{}", pos
-            return ("".join(p + vals[i] for p, i in self.prefix_idx) + "}",
-                    pos)
-        for i, rd in enumerate(self.readers):
-            if (nm >> i) & 1:
-                ap(None)
-            else:
-                frag, pos = rd(b, pos)
-                ap(frag)
-        return vals, pos
-
-
 def _bitmap_ordinals(bm: bytes, ncol: int) -> list[int]:
     return [i for i in range(ncol) if (bm[i >> 3] >> (i & 7)) & 1]
 
@@ -638,21 +377,11 @@ class RowsDecoder:
     """Per-TABLE_MAP compiled rows-event decoder: whole-event readers
     cached per (present bitmaps, mode, op)."""
 
-    __slots__ = ("tme", "cache", "ev_cache")
+    __slots__ = ("tme", "ev_cache")
 
     def __init__(self, tme) -> None:
         self.tme = tme
-        self.cache: dict[tuple, ImageReader] = {}
         self.ev_cache: dict[tuple, object] = {}
-
-    def reader(self, present: bytes, mode: str) -> ImageReader | None:
-        key = (present, mode)
-        r = self.cache.get(key)
-        if r is None:
-            ords = _bitmap_ordinals(present, len(self.tme.columns))
-            r = ImageReader(self.tme, ords, mode)
-            self.cache[key] = r
-        return r if r.ok else None
 
     _MISSING = object()
 

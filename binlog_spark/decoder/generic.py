@@ -1,30 +1,30 @@
 """Generic-table decode: any MySQL schema → change events.
 
-The repo_files kernel (decoder.kernel) is specialized for the lake table's
-fixed columns; this path handles *arbitrary* TABLE_MAP schemas — all 24
-scalar types (packed decimal, bitfield temporals, enum/set, binary JSON…)
-— via COMPILED per-layout column readers (decoder.columnar), in two
-output modes:
+This is the engine's one row decoder for everything the vectorized
+repo_files kernel (decoder.vector) does not claim: arbitrary TABLE_MAP
+schemas — all 24 scalar types (packed decimal, bitfield temporals,
+enum/set, binary JSON…) — via COMPILED per-layout column readers
+(decoder.columnar), in two output modes:
 
   * ``decode_changes_generic``: canonical JSON row images keyed by column
     name (or ``@ordinal`` without FULL metadata), mirroring the reference
     CLI's rendering (/root/reference/cmd/binlog/main.go:196-265)
   * ``decode_changes_vals``: raw cell strings in TABLE_MAP ordinal order
     (``array<string>``) — the cheap path for the multi-table lake apply,
-    which casts cells to typed columns instead of parsing JSON
+    which casts cells to typed columns instead of parsing JSON; the
+    vector kernel's declined chunks also decode here and are mapped onto
+    CHANGE_SCHEMA by decoder.kernel
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, BooleanType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from .. import constants as C
-from ..mysql.decode import Cur, iter_frames, parse_table_map
-from .chunks import check_span_bounds
+from ..mysql.decode import BinlogError, Cur, iter_frames, parse_table_map
+from .chunks import iter_chunk_bytes
 from .columnar import RowsDecoder
 
 GENERIC_SCHEMA = StructType([
@@ -130,7 +130,8 @@ def _lean_frames(data: bytes, has_magic: bool, verify_crc: bool):
     frame — no Frame objects.  CRC is verified on rows-frames only: a
     non-rows frame's verdict never reaches an output record (the same
     output-equivalence argument as decoder.vector, SURVEY A28).  Legacy
-    v1/v3 chunks fall back to the classic iterator."""
+    v1/v3 heads (13-byte v1 headers, no FDE) take mysql.decode.iter_frames,
+    which knows their header layouts."""
     import struct
     import zlib
 
@@ -183,10 +184,16 @@ def decode_span_generic(data: bytes, log_file: str, *,
                         verify_crc: bool = True,
                         mode: str = "json") -> dict[str, list]:
     """Decode one chunk into columnar lists with compiled per-layout
-    readers — no per-record objects, no per-cell type dispatch."""
+    readers — no per-record objects, no per-cell type dispatch.
+
+    Besides the schema columns the dict carries ``_tables``: one
+    ``(TableMap, row count)`` pair per decoded rows-event, in output
+    order, so a caller can resolve each row's column names.  A rows-event
+    whose table id has no TABLE_MAP in the chunk raises BinlogError."""
     names = _GCOLS if mode == "json" else _VCOLS
     cols: dict[str, list] = {k: [] for k in names}
     ex = {k: cols[k].extend for k in names}
+    cols["_tables"] = tables = []
     ex_before = ex["before_json" if mode == "json" else "before_vals"]
     ex_after = ex["after_json" if mode == "json" else "after_vals"]
     tme_cache: dict[int, tuple] = {}
@@ -224,7 +231,7 @@ def decode_span_generic(data: bytes, log_file: str, *,
                 continue
             entry = tme_cache.get(tid)
             if entry is None:
-                continue
+                raise BinlogError(f"no tableMapEvent for tableID {tid}")
             tme, dec = entry
             pos = pos8 + 2  # flags
             if t in C.ROWS_EVENTS_V2:
@@ -246,7 +253,6 @@ def decode_span_generic(data: bytes, log_file: str, *,
                   else "U" if is_update else "D")
             read_ev = dec.event_reader(present0, present1, mode, op)
             if read_ev is None:
-                from ..mysql.decode import BinlogError
                 raise BinlogError(
                     f"uncompilable column layout for table {tme.table}")
             # whole-event codegen: all rows of the event decode inside one
@@ -255,6 +261,7 @@ def decode_span_generic(data: bytes, log_file: str, *,
             n = len(afters) if op != "D" else len(befores)
             if not n:
                 continue
+            tables.append((tme, n))
             ex_before(befores if op != "I" else [None] * n)
             ex_after(afters if op != "D" else [None] * n)
             if mode == "vals":
@@ -292,33 +299,13 @@ def _to_batch(cols: dict[str, list], mode: str):
     return pa.RecordBatch.from_arrays(arrays, names=list(names))
 
 
-def _make_worker(mode: str, from_blobs: bool):
+def _make_worker(mode: str):
     def work(batches):
-        for rb in batches:
-            d = rb.to_pydict()
-            if from_blobs:
-                it = zip(d["log_file"], d["chunk_off"], d["data"])
-            else:
-                it = None
-            if from_blobs:
-                for log_file, off, data in it:
-                    check_span_bounds(log_file, off, len(data))
-                    cols = decode_span_generic(data, log_file,
-                                               has_magic=off == 0, mode=mode)
-                    if cols["op"]:
-                        yield _to_batch(cols, mode)
-            else:
-                for dump_dir, log_file, off, ln in zip(
-                        d["dump_dir"], d["log_file"], d["chunk_off"],
-                        d["chunk_len"]):
-                    check_span_bounds(log_file, off, ln)
-                    with open(os.path.join(dump_dir, log_file), "rb") as f:
-                        f.seek(off)
-                        data = f.read(ln)
-                    cols = decode_span_generic(data, log_file,
-                                               has_magic=off == 0, mode=mode)
-                    if cols["op"]:
-                        yield _to_batch(cols, mode)
+        for log_file, off, data in iter_chunk_bytes(batches):
+            cols = decode_span_generic(data, log_file, has_magic=off == 0,
+                                       mode=mode)
+            if cols["op"]:
+                yield _to_batch(cols, mode)
     return work
 
 
@@ -327,8 +314,7 @@ def _decode(chunks: DataFrame, mode: str,
     if partitions:
         chunks = chunks.repartition(partitions)
     schema = GENERIC_SCHEMA if mode == "json" else VALS_SCHEMA
-    return chunks.mapInArrow(
-        _make_worker(mode, "data" in chunks.columns), schema)
+    return chunks.mapInArrow(_make_worker(mode), schema)
 
 
 def decode_changes_generic(chunks: DataFrame, *,

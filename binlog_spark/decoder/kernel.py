@@ -1,9 +1,14 @@
-"""Vectorized decode kernel: chunk spans → change-event DataFrame.
+"""Decode entry point for the lake table: chunk spans → change events.
 
-One ``mapInPandas`` pass; each Arrow batch of chunk-span rows makes the
+One ``mapInArrow`` pass; each Arrow batch of chunk-span rows makes the
 executor read its own byte ranges and decode *thousands of events per
 call* — Python cost is amortized per multi-megabyte chunk, never per
 DataFrame row (BASELINE.json:6; strategy per SURVEY §7 "hard parts" #1).
+
+Each chunk goes to the vectorized kernel (decoder.vector); a chunk it
+declines decodes through the generic compiled decoder
+(decoder.generic, ``mode="vals"``) and is mapped onto the same schema
+here, so there is one row decoder family behind both paths.
 
 Output is the canonical CDC record of FIXTURES.md §3, flattened for the
 apply path (structs cost Arrow conversion time; the relational columns the
@@ -20,19 +25,15 @@ pipeline shuffles on must be top-level for Catalyst to prune/push down):
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
-import pandas as pd
+from json.encoder import encode_basestring_ascii as _esc
+from operator import itemgetter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
-from .. import constants as C
-from ..mysql.decode import Cur, iter_frames, parse_rows_event, parse_table_map
-from .chunks import check_span_bounds
+from .chunks import iter_chunk_bytes
 
 CHANGE_SCHEMA = StructType([
     StructField("op", StringType(), False),
@@ -58,205 +59,6 @@ CHANGE_SCHEMA = StructType([
 
 _COLNAMES = [f.name for f in CHANGE_SCHEMA.fields]
 
-
-def _parse_rows_fast(body: memoryview, event_type: int, fde, tme):
-    """Specialized row parser for all-VARCHAR tables (the repo_files
-    schema): same wire layout as the generic path
-    (/root/reference/rbr.go:246-350) but with inlined length-prefix reads.
-    Returns None when the event needs the generic decoder."""
-    pos = 4 if fde.post_header(event_type, 8) == 6 else 6
-    pos += 2  # flags
-    if event_type in C.ROWS_EVENTS_V2:
-        extra = body[pos] | (body[pos + 1] << 8)
-        pos += extra
-    ncol = body[pos]
-    if ncol >= 0xFB or ncol > 8:  # lenenc >1 byte or multi-byte null bitmap
-        return None
-    pos += 1
-    nb = (ncol + 7) // 8
-    present = bytes(body[pos:pos + nb])
-    pos += nb
-    is_update = event_type in C.UPDATE_ROWS_EVENTS
-    if is_update:
-        present2 = bytes(body[pos:pos + nb])
-        pos += nb
-        if present2 != present:
-            return None
-    if present != bytes([0xFF] * (ncol // 8) + ([((1 << (ncol % 8)) - 1)]
-                                               if ncol % 8 else [])):
-        return None  # partial-column image → generic path
-    cols = tme.columns
-    if len(cols) != ncol:
-        return None
-    # widths: 1- or 2-byte length prefix per column, all varchar/string
-    widths = []
-    for c in cols:
-        if c.type not in (C.TYPE_VARCHAR, C.TYPE_STRING):
-            return None
-        widths.append(1 if c.meta < 256 else 2)
-    end = len(body)
-    images_per_row = 2 if is_update else 1
-    rows = []
-    b = body
-    while pos < end:
-        imgs = []
-        for _ in range(images_per_row):
-            nullmap = b[pos]
-            pos += 1
-            vals = []
-            for i in range(ncol):
-                if (nullmap >> i) & 1:
-                    vals.append(None)
-                    continue
-                if widths[i] == 1:
-                    ln = b[pos]
-                    pos += 1
-                else:
-                    ln = b[pos] | (b[pos + 1] << 8)
-                    pos += 2
-                vals.append(str(b[pos:pos + ln], "utf-8"))
-                pos += ln
-            imgs.append(vals)
-        if is_update:
-            rows.append((imgs[0], imgs[1]))
-        elif event_type in C.WRITE_ROWS_EVENTS:
-            rows.append((None, imgs[0]))
-        else:
-            rows.append((imgs[0], None))
-    return rows
-
-
-def decode_span_columns(data: bytes, log_file: str, *, has_magic: bool = False,
-                        verify_crc: bool = True) -> dict[str, list]:
-    """Decode one chunk into columnar lists (no per-record objects)."""
-    import uuid as _uuid
-    cols: dict[str, list] = {k: [] for k in _COLNAMES}
-    ap = {k: cols[k].append for k in _COLNAMES}
-    tme_cache: dict[int, object] = {}
-    # MySQL re-emits an identical TABLE_MAP before every rows-event of a
-    # statement run; parse each distinct body once (keyed by raw bytes).
-    tme_body_cache: dict[bytes, object] = {}
-    gtid = None
-    seq = 0
-    for fr, fde_now in iter_frames(data, has_magic=has_magic,
-                                   verify_crc=verify_crc):
-        t = fr.event_type
-        if t == C.GTID_EVENT or t == C.ANONYMOUS_GTID_EVENT:
-            cur = Cur(fr.body)
-            cur.int1()
-            sid = cur.bytes(16)
-            gno = cur.int8()
-            gtid = f"{_uuid.UUID(bytes=sid)}:{gno}"
-            seq = 0
-        elif t == C.TABLE_MAP_EVENT:
-            key = bytes(fr.body)
-            tme = tme_body_cache.get(key)
-            if tme is None:
-                tme = parse_table_map(Cur(fr.body))
-                tme_body_cache[key] = tme
-            tme_cache[tme.table_id] = tme
-        elif t in C.ROWS_EVENTS:
-            pos8 = 4 if fde_now.post_header(t, 8) == 6 else 6
-            tid = int.from_bytes(fr.body[:pos8], "little")
-            tme = tme_cache.get(tid)
-            rows = (_parse_rows_fast(fr.body, t, fde_now, tme)
-                    if tme is not None else None)
-            bnames = anames = None
-            if rows is None:
-                tme, rows, bnames, anames = parse_rows_event(
-                    Cur(fr.body), t, fde_now, tme_cache)
-            if tme is None or not rows:
-                continue
-            op = ("I" if t in C.WRITE_ROWS_EVENTS
-                  else "U" if t in C.UPDATE_ROWS_EVENTS else "D")
-            pos, ts, crc = fr.next_pos, fr.timestamp, fr.crc_ok
-            full = getattr(tme, "_full_names", None)
-            if full is None:
-                full = tme._full_names = tuple(c.name for c in tme.columns)
-            partial = ((anames is not None and anames != full)
-                       or (bnames is not None and bnames != full))
-            import json as _json
-            if partial:
-                # MINIMAL images: map by present-column name (slow path;
-                # /root/reference/rbr.go:283-303 reads the same subsets)
-                base = ("repo", "path", "commit", "lang", "content")
-                pres_csv = ",".join(anames) if anames is not None else None
-                for before, after in rows:
-                    adict = (dict(zip(anames, after))
-                             if after is not None else {})
-                    bdict = (dict(zip(bnames, before))
-                             if before is not None else {})
-                    img = adict if after is not None else bdict
-                    ap["op"](op)
-                    ap["repo"](img.get("repo"))
-                    ap["path"](img.get("path"))
-                    ap["commit"](adict.get("commit"))
-                    ap["lang"](adict.get("lang"))
-                    ap["content"](adict.get("content"))
-                    ex = {n: v for n, v in adict.items()
-                          if n not in base and v is not None}
-                    ap["extra_json"](_json.dumps(ex, sort_keys=True)
-                                     if ex else None)
-                    ap["before_repo"](bdict.get("repo"))
-                    ap["before_path"](bdict.get("path"))
-                    ap["gtid"](gtid)
-                    ap["seq_in_tx"](seq)
-                    ap["log_file"](log_file)
-                    ap["log_pos"](pos)
-                    ap["ts_sec"](ts)
-                    ap["crc_ok"](crc)
-                    ap["present_cols"](pres_csv if op != "D" else None)
-                    seq += 1
-                continue
-            layout = getattr(tme, "_layout", None)
-            if layout is None:
-                names = [c.name for c in tme.columns]
-                base = ("repo", "path", "commit", "lang", "content")
-                fixed = [names.index(n) if n in names else None for n in base]
-                extras = [(n, i) for i, n in enumerate(names) if n not in base]
-                layout = (fixed, extras)
-                tme._layout = layout
-            (i_repo, i_path, i_commit, i_lang, i_content), extras = layout
-            for before, after in rows:
-                img = after if after is not None else before
-                ap["op"](op)
-                ap["repo"](img[i_repo])
-                ap["path"](img[i_path])
-                if after is not None:
-                    ap["commit"](img[i_commit])
-                    ap["lang"](img[i_lang])
-                    ap["content"](img[i_content])
-                    if extras:
-                        ex = {n: img[i] for n, i in extras
-                              if img[i] is not None}
-                        ap["extra_json"](_json.dumps(ex, sort_keys=True)
-                                         if ex else None)
-                    else:
-                        ap["extra_json"](None)
-                else:
-                    ap["commit"](None)
-                    ap["lang"](None)
-                    ap["content"](None)
-                    ap["extra_json"](None)
-                if before is not None:
-                    ap["before_repo"](before[i_repo])
-                    ap["before_path"](before[i_path])
-                else:
-                    ap["before_repo"](None)
-                    ap["before_path"](None)
-                ap["gtid"](gtid)
-                ap["seq_in_tx"](seq)
-                ap["log_file"](log_file)
-                ap["log_pos"](pos)
-                ap["ts_sec"](ts)
-                ap["crc_ok"](crc)
-                ap["present_cols"](None)
-                seq += 1
-        elif t == C.ROTATE_EVENT:
-            tme_cache.clear()  # (/root/reference/binlog.go:42)
-    return cols
-
-
 _ARROW_TYPES = {
     "seq_in_tx": "int32", "log_pos": "int64", "ts_sec": "int64",
     "crc_ok": "bool",
@@ -277,184 +79,130 @@ KEY_SCHEMA = StructType([
 _KEYNAMES = [f.name for f in KEY_SCHEMA.fields]
 
 
-def decode_span_keys(data: bytes, log_file: str, *, has_magic: bool = False,
-                     verify_crc: bool = True) -> dict[str, list]:
-    """Cheap first pass for late materialization: extract only (op, key,
-    before-key, order) per change — values beyond the key columns are
-    skipped by length arithmetic, no string materialization."""
-    from ..mysql.decode import parse_table_map
-    cols: dict[str, list] = {k: [] for k in _KEYNAMES}
-    ap = {k: cols[k].append for k in _KEYNAMES}
-    tme_cache: dict[int, object] = {}
-    tme_body_cache: dict[bytes, object] = {}
-    seq = 0
-    for fr, fde_now in iter_frames(data, has_magic=has_magic,
-                                   verify_crc=verify_crc):
-        t = fr.event_type
-        if t == C.GTID_EVENT or t == C.ANONYMOUS_GTID_EVENT:
-            seq = 0
-        elif t == C.TABLE_MAP_EVENT:
-            key = bytes(fr.body)
-            tme = tme_body_cache.get(key)
-            if tme is None:
-                tme = parse_table_map(Cur(fr.body))
-                tme_body_cache[key] = tme
-            tme_cache[tme.table_id] = tme
-        elif t in C.ROWS_EVENTS:
-            pos8 = 4 if fde_now.post_header(t, 8) == 6 else 6
-            tid = int.from_bytes(fr.body[:pos8], "little")
-            tme = tme_cache.get(tid)
-            if tme is None:
-                continue
-            parsed = _parse_rows_keys(fr.body, t, fde_now, tme)
-            if parsed is None:
-                # fall back: full parse, keep keys only — mapped by NAME
-                # so MINIMAL (partial) images resolve correctly
-                _t2, rows, bnames, anames = parse_rows_event(
-                    Cur(fr.body), t, fde_now, tme_cache)
-
-                def key_of(img, names):
-                    if img is None:
-                        return None
-                    d = dict(zip(names, img))
-                    return (d.get("repo"), d.get("path"))
-
-                parsed = [(key_of(b, bnames), key_of(a, anames))
-                          for b, a in rows]
-            op = ("I" if t in C.WRITE_ROWS_EVENTS
-                  else "U" if t in C.UPDATE_ROWS_EVENTS else "D")
-            pos, crc = fr.next_pos, fr.crc_ok
-            for before, after in parsed:
-                img = after if after is not None else before
-                ap["op"](op)
-                ap["repo"](img[0])
-                ap["path"](img[1])
-                if before is not None:
-                    ap["before_repo"](before[0])
-                    ap["before_path"](before[1])
-                else:
-                    ap["before_repo"](None)
-                    ap["before_path"](None)
-                ap["log_file"](log_file)
-                ap["log_pos"](pos)
-                ap["seq_in_tx"](seq)
-                ap["crc_ok"](crc)
-                seq += 1
-        elif t == C.ROTATE_EVENT:
-            tme_cache.clear()
-    return cols
+_BASE = ("repo", "path", "commit", "lang", "content")
+_PASSTHROUGH = ("op", "gtid", "seq_in_tx", "log_file", "log_pos", "ts_sec",
+                "crc_ok")
 
 
-def _parse_rows_keys(body: memoryview, event_type: int, fde, tme):
-    """Key-only row walk for all-varchar tables: parse the first two
-    columns (repo, path), skip the rest by length arithmetic."""
-    pos = 4 if fde.post_header(event_type, 8) == 6 else 6
-    pos += 2
-    if event_type in C.ROWS_EVENTS_V2:
-        extra = body[pos] | (body[pos + 1] << 8)
-        pos += extra
-    ncol = body[pos]
-    if ncol >= 0xFB or ncol > 8:
-        return None
-    pos += 1
-    nb = (ncol + 7) // 8
-    present = bytes(body[pos:pos + nb])
-    pos += nb
-    is_update = event_type in C.UPDATE_ROWS_EVENTS
-    if is_update:
-        if bytes(body[pos:pos + nb]) != present:
-            return None
-        pos += nb
-    full = bytes([0xFF] * (ncol // 8) + ([((1 << (ncol % 8)) - 1)]
-                                         if ncol % 8 else []))
-    if present != full:
-        return None
-    widths = []
-    for c in tme.columns:
-        if c.type not in (C.TYPE_VARCHAR, C.TYPE_STRING):
-            return None
-        widths.append(1 if c.meta < 256 else 2)
-    if len(widths) != ncol:
-        return None
-    end = len(body)
-    images = 2 if is_update else 1
-    out = []
-    b = body
-    while pos < end:
-        imgs = []
-        for _ in range(images):
-            nullmap = b[pos]
-            pos += 1
-            key_vals = [None, None]
-            for i in range(ncol):
-                if (nullmap >> i) & 1:
-                    continue
-                if widths[i] == 1:
-                    ln = b[pos]
-                    pos += 1
-                else:
-                    ln = b[pos] | (b[pos + 1] << 8)
-                    pos += 2
-                if i < 2:
-                    key_vals[i] = str(b[pos:pos + ln], "utf-8")
-                pos += ln
-            imgs.append(tuple(key_vals))
-        if is_update:
-            out.append((imgs[0], imgs[1]))
-        elif event_type in C.WRITE_ROWS_EVENTS:
-            out.append((None, imgs[0]))
+def _change_layout(tme):
+    """``(names, base ordinals, extras)`` of a TABLE_MAP against the
+    canonical columns, cached on the TableMap.  ``extras`` lists the
+    non-base columns as (rendered ``"name": `` prefix, ordinal) sorted by
+    name, so an extra_json object assembles exactly as
+    ``json.dumps(..., sort_keys=True)`` renders it (every vals cell is a
+    string or None)."""
+    lay = getattr(tme, "_change_layout", None)
+    if lay is None:
+        names = tuple(c.name for c in tme.columns)
+        base = tuple(names.index(n) if n in names else None for n in _BASE)
+        extras = tuple((_esc(n) + ": ", i) for n, i in sorted(
+            (n, i) for i, n in enumerate(names) if n not in _BASE))
+        lay = tme._change_layout = (names, base, extras)
+    return lay
+
+
+def _extra_json(row, extras) -> str | None:
+    parts = [p + _esc(row[i]) for p, i in extras if row[i] is not None]
+    return "{" + ", ".join(parts) + "}" if parts else None
+
+
+def _vals_to_changes(cols: dict[str, list], keys: bool) -> dict[str, list]:
+    """One chunk's ``decode_span_generic(mode="vals")`` output → the
+    CHANGE_SCHEMA columns (KEY_SCHEMA's subset when ``keys``), event by
+    event (``cols["_tables"]``):
+
+      * repo/path from the after image, else the before image;
+      * commit/lang/content and the non-base ``extra_json`` map from the
+        after image only;
+      * before_repo/before_path from the before image;
+      * present_cols: the after image's column csv when either image is
+        partial (MINIMAL), null for FULL images and for deletes."""
+    out = {k: cols[k] for k in _PASSTHROUGH}
+    derived = ("repo", "path", "before_repo", "before_path") + (
+        () if keys else ("commit", "lang", "content", "extra_json",
+                         "present_cols"))
+    for k in derived:
+        out[k] = []
+    ex = {k: out[k].extend for k in derived}
+    ops, bvals, avals = cols["op"], cols["before_vals"], cols["after_vals"]
+    bpres, apres = cols["before_present"], cols["after_present"]
+    s = 0
+    for tme, n in cols["_tables"]:
+        names, base, extras = _change_layout(tme)
+        e = s + n
+        op = ops[s]
+        befores, afters = bvals[s:e], avals[s:e]
+        nulls = [None] * n
+
+        def pick(imgs, i):
+            return nulls if i is None else list(map(itemgetter(i), imgs))
+        img = befores if op == "D" else afters
+        ex["repo"](pick(img, base[0]))
+        ex["path"](pick(img, base[1]))
+        bkey = (None, None) if op == "I" else base
+        ex["before_repo"](pick(befores, bkey[0]))
+        ex["before_path"](pick(befores, bkey[1]))
+        s = e
+        if keys:
+            continue
+        if op == "D":
+            for k in ("commit", "lang", "content", "extra_json",
+                      "present_cols"):
+                ex[k](nulls)
+            continue
+        ex["commit"](pick(afters, base[2]))
+        ex["lang"](pick(afters, base[3]))
+        ex["content"](pick(afters, base[4]))
+        ex["extra_json"]([_extra_json(r, extras) for r in afters]
+                         if extras else nulls)
+        ap = apres[e - 1]
+        if bpres[e - 1] is None and ap is None:
+            pc = None
+        elif ap is None:
+            pc = ",".join(names)
         else:
-            out.append((imgs[0], None))
+            pc = ",".join(nm for nm, bit in zip(names, ap) if bit == "1")
+        ex["present_cols"]([pc] * n)
     return out
 
 
-def _cols_to_batch(cols: dict[str, list]):
-    """Columnar lists → Arrow RecordBatch directly (no pandas object
-    Series in between — one C conversion pass per column)."""
+def _fallback_batch(data: bytes, log_file: str, has_magic: bool,
+                    keys: bool = False):
+    """Decode a chunk the vector kernel declined with the generic
+    decoder, mapped onto CHANGE_SCHEMA (KEY_SCHEMA when ``keys``)."""
     import pyarrow as pa
-    arrays = [pa.array(cols[k], type=pa.type_for_alias(
-        _ARROW_TYPES.get(k, "string"))) for k in _COLNAMES]
-    return pa.RecordBatch.from_arrays(arrays, names=list(_COLNAMES))
+    from .generic import decode_span_generic
+    names = _KEYNAMES if keys else _COLNAMES
+    cols = _vals_to_changes(decode_span_generic(
+        data, log_file, has_magic=has_magic, mode="vals"), keys)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[k], type=pa.type_for_alias(
+            _ARROW_TYPES.get(k, "string"))) for k in names], names=names)
 
 
-def _decode_one(data: bytes, log_file: str, has_magic: bool):
+def _decode_one(data: bytes, log_file: str, has_magic: bool,
+                keys: bool = False):
     """Vectorized kernel first (decoder/vector.py: numpy header walk +
-    codegen row walk + ragged-join Arrow build, ~2× the classic kernel);
-    chunks outside its fast layout (legacy versions, MINIMAL images,
-    non-varchar tables, schema evolution) return None and re-decode on
-    the classic path — per-chunk granularity, so a mixed dump pays the
-    slow path only for the chunks that need it."""
-    from .vector import decode_span_batch
-    rb = decode_span_batch(data, log_file, has_magic=has_magic)
-    if rb is not None:
-        return rb if rb.num_rows else None
-    cols = decode_span_columns(data, log_file, has_magic=has_magic)
-    return _cols_to_batch(cols) if cols["op"] else None
+    codegen row walk + ragged-join Arrow build); chunks outside its fast
+    layout (legacy versions, non-varchar tables, schema evolution, an
+    unmapped table id) return None and re-decode through the generic
+    decoder — per-chunk granularity, so a mixed dump pays the generic
+    path only for the chunks that need it."""
+    from .vector import decode_span_batch, decode_span_keys_batch
+    fast = decode_span_keys_batch if keys else decode_span_batch
+    rb = fast(data, log_file, has_magic=has_magic)
+    if rb is None:
+        rb = _fallback_batch(data, log_file, has_magic, keys)
+    return rb if rb.num_rows else None
 
 
-def _decode_spans_arrow(batches):
-    for rb in batches:
-        d = rb.to_pydict()
-        for dump_dir, log_file, off, ln in zip(
-                d["dump_dir"], d["log_file"], d["chunk_off"], d["chunk_len"]):
-            check_span_bounds(log_file, off, ln)
-            with open(os.path.join(dump_dir, log_file), "rb") as f:
-                f.seek(off)
-                data = f.read(ln)
-            out = _decode_one(data, log_file, off == 0)
+def _make_worker(keys: bool):
+    def work(batches):
+        for log_file, off, data in iter_chunk_bytes(batches):
+            out = _decode_one(data, log_file, off == 0, keys)
             if out is not None:
                 yield out
-
-
-def _decode_blobs_arrow(batches):
-    for rb in batches:
-        d = rb.to_pydict()
-        for log_file, off, data in zip(d["log_file"], d["chunk_off"],
-                                       d["data"]):
-            check_span_bounds(log_file, off, len(data))
-            out = _decode_one(data, log_file, off == 0)
-            if out is not None:
-                yield out
+    return work
 
 
 def decode_changes(chunks: DataFrame, *, partitions: int | None = None) -> DataFrame:
@@ -467,62 +215,18 @@ def decode_changes(chunks: DataFrame, *, partitions: int | None = None) -> DataF
     """
     if partitions:
         chunks = chunks.repartition(partitions)
-    if "data" in chunks.columns:
-        return chunks.mapInArrow(_decode_blobs_arrow, CHANGE_SCHEMA)
-    return chunks.mapInArrow(_decode_spans_arrow, CHANGE_SCHEMA)
-
-
-def _decode_keys_one(data: bytes, log_file: str, has_magic: bool):
-    """Vectorized key pass first, classic fallback (see _decode_one)."""
-    from .vector import decode_span_keys_batch
-    rb = decode_span_keys_batch(data, log_file, has_magic=has_magic)
-    if rb is not None:
-        return rb if rb.num_rows else None
-    cols = decode_span_keys(data, log_file, has_magic=has_magic)
-    return _keys_to_batch(cols) if cols["op"] else None
-
-
-def _decode_keys_spans_arrow(batches):
-    for rb in batches:
-        d = rb.to_pydict()
-        for dump_dir, log_file, off, ln in zip(
-                d["dump_dir"], d["log_file"], d["chunk_off"], d["chunk_len"]):
-            check_span_bounds(log_file, off, ln)
-            with open(os.path.join(dump_dir, log_file), "rb") as f:
-                f.seek(off)
-                data = f.read(ln)
-            out = _decode_keys_one(data, log_file, off == 0)
-            if out is not None:
-                yield out
-
-
-def _decode_keys_blobs_arrow(batches):
-    for rb in batches:
-        d = rb.to_pydict()
-        for log_file, off, data in zip(d["log_file"], d["chunk_off"],
-                                       d["data"]):
-            check_span_bounds(log_file, off, len(data))
-            out = _decode_keys_one(data, log_file, off == 0)
-            if out is not None:
-                yield out
-
-
-def _keys_to_batch(cols: dict[str, list]):
-    import pyarrow as pa
-    arrays = [pa.array(cols[k], type=pa.type_for_alias(
-        _ARROW_TYPES.get(k, "string"))) for k in _KEYNAMES]
-    return pa.RecordBatch.from_arrays(arrays, names=list(_KEYNAMES))
+    return chunks.mapInArrow(_make_worker(False), CHANGE_SCHEMA)
 
 
 def decode_keys(chunks: DataFrame, *, partitions: int | None = None) -> DataFrame:
     """Key-only decode pass (late materialization, ~3-4× cheaper than the
-    full decode: values are length-skipped, never materialized)."""
+    full decode on the vector path: values are length-skipped, never
+    materialized; declined chunks decode in full and project the keys)."""
     if partitions:
         chunks = chunks.repartition(partitions)
-    if "data" in chunks.columns:
-        return chunks.mapInArrow(_decode_keys_blobs_arrow, KEY_SCHEMA)
-    return chunks.mapInArrow(_decode_keys_spans_arrow, KEY_SCHEMA)
+    return chunks.mapInArrow(_make_worker(True), KEY_SCHEMA)
 
 
 def with_ts(events: DataFrame) -> DataFrame:
     return events.withColumn("ts", F.to_timestamp(F.from_unixtime("ts_sec")))
+

@@ -1,10 +1,10 @@
 """Vectorized chunk decoder: fused frame walk + codegen row walk +
 ragged-join Arrow build, with no per-value Python objects.
 
-The classic kernel (kernel.decode_span_columns) spends ~40% of its time
-materializing one Python ``str`` per column value and ~30% in per-frame
-header objects; at the fixture's ~1.7 rows/event the *frame* layer costs
-as much as the row layer.  This module replaces both for the common case
+A row decoder that builds one Python ``str`` per column value and one
+header object per frame spends most of its time on exactly those; at
+the fixture's ~1.7 rows/event the *frame* layer costs as much as the
+row layer.  This module avoids both for the common case
 — a v4 dump whose rows-events target the canonical all-VARCHAR
 ``(repo, path, commit, lang, content)`` table with FULL row images (the
 wire layout of /root/reference/rbr.go:246-350) — with two passes:
@@ -29,12 +29,14 @@ record NULL without consuming bytes; the per-row null bitmap indexes
 present columns only) and the after-image mask's column csv lands in
 ``present_cols`` per event.  Anything the fast layout cannot express —
 v1/v3 dumps, non-varchar columns, schema evolution (extra columns), a
-mid-chunk FDE that changes the checksum algorithm — returns ``None``
-and the caller re-decodes the whole chunk with the classic kernel, so
-correctness never depends on this path (tests pin v2 ≡ classic on every
-fixture family).  UTF-8 is validated once per gathered buffer plus a
-boundary check that every string starts on a character start — together
-these guarantee per-string validity without per-string decodes.
+mid-chunk FDE that changes the checksum algorithm, a rows-event with no
+TABLE_MAP in scope — returns ``None`` and the caller re-decodes the
+whole chunk with the generic decoder (decoder.generic via
+decoder.kernel's schema adapter), so correctness never depends on this
+path (tests pin vector ≡ generic fallback on every fixture family).
+UTF-8 is validated once per gathered buffer plus a boundary check that
+every string starts on a character start — together these guarantee
+per-string validity without per-string decodes.
 """
 
 from __future__ import annotations
@@ -90,8 +92,8 @@ def decode_span_batch(data: bytes, log_file: str, *, has_magic: bool = False,
     """Decode one chunk into a CHANGE_SCHEMA ``pyarrow.RecordBatch``.
 
     Returns ``None`` when the chunk is outside the fast layout (caller
-    falls back to :func:`kernel.decode_span_columns`), or a RecordBatch
-    (possibly empty) when fully decoded.
+    falls back to the generic decoder, see decoder.kernel), or a
+    RecordBatch (possibly empty) when fully decoded.
     """
     try:
         return _decode(data, log_file, has_magic, verify_crc)
@@ -104,7 +106,7 @@ def decode_span_keys_batch(data: bytes, log_file: str, *,
                            verify_crc: bool = True):
     """Key-only variant → KEY_SCHEMA RecordBatch (late materialization:
     values beyond (repo, path) are length-skipped, never collected).
-    None = fall back to :func:`kernel.decode_span_keys`."""
+    None = fall back to the generic decoder (decoder.kernel)."""
     try:
         return _decode(data, log_file, has_magic, verify_crc, keys=True)
     except _Fallback:
@@ -115,7 +117,7 @@ def _fast_widths(tme):
     """When ``tme`` is the canonical layout: ``(widths, full_walkers,
     key_walkers)`` with the three per-kind compiled row walkers resolved
     up front, so the frame walk hands each job its walker directly (no
-    per-job dict lookup).  None routes the chunk to the classic path.
+    per-job dict lookup).  None routes the chunk to the generic path.
     Cached on the TableMap object."""
     w = getattr(tme, "_vec_widths", False)
     if w is not False:
@@ -297,12 +299,11 @@ def _decode(data: bytes, log_file: str, has_magic: bool,
         raise _Fallback
 
     # --- fused frame walk: framing + CRC + demux in one pass ---------
-    # Only rows-frames need CRC verification here: the classic kernel
-    # computes crc_ok per frame but only a ROWS frame's verdict ever
-    # reaches an output record, so skipping non-rows CRC is
-    # output-equivalent and saves ~2/3 of the checksum work.  The demux
-    # is ONE bytes-table index (_CAT); statement frames — the majority —
-    # cost only the framing read plus that index.
+    # Only rows-frames need CRC verification here: only a ROWS frame's
+    # crc_ok verdict ever reaches an output record, so skipping non-rows
+    # CRC is output-equivalent and saves ~2/3 of the checksum work.  The
+    # demux is ONE bytes-table index (_CAT); statement frames — the
+    # majority — cost only the framing read plus that index.
     u32 = _U32
     crc32 = zlib.crc32
     do_crc = verify_crc and cksum == 4
@@ -310,9 +311,7 @@ def _decode(data: bytes, log_file: str, has_magic: bool,
     rows_kind = _ROWS_KIND
     rows_v2 = _ROWS_V2
 
-    tme_cache: dict[int, object] = {}
     widths_cache: dict[int, tuple | None] = {}  # tid -> fast-layout widths
-    rotated_ids: set[int] = set()  # table_ids evicted by a ROTATE
     tme_body_cache: dict[bytes, object] = {}
     last_tm_body: bytes | None = None
     gtid_strs: list[str] = []
@@ -347,14 +346,13 @@ def _decode(data: bytes, log_file: str, has_magic: bool,
                 bpos += extra
             entry = widths_cache.get(tid, False)
             if entry is False:
-                if tid in rotated_ids:
-                    # the classic kernel keeps its TableMap cache across
-                    # ROTATE and would decode this event — decline the
-                    # chunk so it stays authoritative (ADVICE r5: a skip
-                    # here silently DROPPED the rows instead)
-                    raise _Fallback
-                pos = end
-                continue  # no TABLE_MAP seen -- classic kernel skips too
+                if tid == 0x00FFFFFF:  # dummy table id: no rows
+                    pos = end
+                    continue
+                # no TABLE_MAP in scope (none in the chunk, or evicted
+                # by a ROTATE): decline, so the generic decoder raises
+                # instead of this walk silently dropping the rows
+                raise _Fallback
             if entry is None:
                 raise _Fallback  # not the canonical all-varchar layout
             widths, fwalk, kwalk = entry
@@ -378,13 +376,13 @@ def _decode(data: bytes, log_file: str, has_magic: bool,
             else:
                 # MINIMAL images: mask-specialized walker + the
                 # statement-level present-column csv (None on deletes,
-                # matching the classic kernel)
+                # matching the generic fallback)
                 bm, am = ((pm0, pm1) if kind == 1
                           else (pm0, None) if kind == 2
                           else (None, pm0))
                 if bm == 0 or am == 0:
                     # a zero-column image carries NO null-bitmap byte;
-                    # the walkers always read one — classic path instead
+                    # the walkers always read one — generic path instead
                     raise _Fallback
                 fn = _walker(widths, kind, keys, bm, am)
                 pres = None if kind == 2 else _pres_csv(am)
@@ -403,7 +401,6 @@ def _decode(data: bytes, log_file: str, has_magic: bool,
             if tme is None:
                 tme = parse_table_map(Cur(memoryview(body)))
                 tme_body_cache[body] = tme
-            tme_cache[tme.table_id] = tme
             widths_cache[tme.table_id] = _fast_widths(tme)
             last_tm_body = body
         elif c == _CAT_GTID:
@@ -415,9 +412,7 @@ def _decode(data: bytes, log_file: str, has_magic: bool,
             cur_gidx = len(gtid_strs) - 1
             txid += 1
         elif c == _CAT_ROT:
-            rotated_ids.update(widths_cache)
-            tme_cache.clear()  # (/root/reference/binlog.go:42)
-            widths_cache.clear()
+            widths_cache.clear()  # (reference binlog.go:42)
             last_tm_body = None
         else:  # _CAT_FDE
             new = parse_fde(Cur(memoryview(

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cdc.pipeline import (flatten_extras, reduce_changes,
-                            reduce_changes_minimal, release_minimal,
+                            reduce_changes_minimal,
                             scan_extra_columns_blobs)
 from ..decoder.kernel import CHANGE_SCHEMA, decode_changes, decode_keys
 from ..lake.table import LakeTable
@@ -96,15 +96,8 @@ def stream_apply(spark: SparkSession, dump_dir: str, table_root: str,
             upserts = reduce_changes(events, salt_buckets=salt_buckets,
                                      key_events=keys)
             upserts, _ = flatten_extras(upserts, names=extra_names)
-        try:
-            snap = table.merge(
-                spark, upserts,
-                batch_id=f"stream-{checkpoint_dir}-{batch_id}")
-        finally:
-            # the reduction persists the decoded batch for its
-            # sub-plans; release it even when the merge raises, or a
-            # long stream's retries leak one cache per attempt
-            release_minimal(upserts)
+        snap = table.merge(spark, upserts,
+                           batch_id=f"stream-{checkpoint_dir}-{batch_id}")
         if on_batch is not None:
             on_batch(batch_id, snap)
 

@@ -17,7 +17,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from binlog_spark.cdc.multi import table_upserts_minimal
-from binlog_spark.cdc.pipeline import release_minimal
 from binlog_spark.decoder.generic import VALS_SCHEMA
 from binlog_spark.lake.table import LakeTable
 
@@ -39,9 +38,7 @@ def _row(op, before=None, after=None, bp=None, ap=None, pos=0):
 def _reduce(spark, rows):
     df = spark.createDataFrame(rows, VALS_SCHEMA)
     up = table_upserts_minimal(df, COLUMNS, PK)
-    out = {(r.k1, r.k2): r.asDict() for r in up.collect()}
-    release_minimal(up)
-    return out
+    return {(r.k1, r.k2): r.asDict() for r in up.collect()}
 
 
 NASTY_KEYS = [
@@ -108,13 +105,11 @@ def test_patch_merge_inherits_from_lake(spark, tmp_path):
     df1 = spark.createDataFrame(b1, VALS_SCHEMA)
     up1 = table_upserts_minimal(df1, COLUMNS, PK)
     t.merge(spark, up1, batch_id="b1")
-    release_minimal(up1)
     b2 = [_row("U", before=["k", "x", None, None], bp="1100",
                after=[None, None, None, None], ap="0010", pos=200)]
     df2 = spark.createDataFrame(b2, VALS_SCHEMA)
     up2 = table_upserts_minimal(df2, COLUMNS, PK)
     t.merge(spark, up2, batch_id="b2")
-    release_minimal(up2)
     rows = {(r.k1, r.k2): r for r in t.read(spark).collect()}
     r = rows[("k", "x")]
     assert r.a is None          # explicitly nulled by the patch
@@ -131,14 +126,12 @@ def test_key_move_inherits_via_packed_base(spark, tmp_path):
     df1 = spark.createDataFrame(b1, VALS_SCHEMA)
     up1 = table_upserts_minimal(df1, COLUMNS, PK)
     t.merge(spark, up1, batch_id="b1")
-    release_minimal(up1)
     # pure key move: after image carries only the new pk cells
     b2 = [_row("U", before=[ok1, ok2, None, None], bp="1100",
                after=[nk1, nk2, None, None], ap="1100", pos=200)]
     df2 = spark.createDataFrame(b2, VALS_SCHEMA)
     up2 = table_upserts_minimal(df2, COLUMNS, PK)
     t.merge(spark, up2, batch_id="b2")
-    release_minimal(up2)
     rows = {(r.k1, r.k2): r for r in t.read(spark).collect()}
     assert (ok1, ok2) not in rows
     r = rows[(nk1, nk2)]

@@ -143,5 +143,3 @@ def test_table_upserts_minimal_unit(spark, dump):
     patched = [r for r in rows if r.present_cols is not None]
     for r in patched[:20]:
         assert set(r.present_cols.split(",")) <= ({"name", "email"} | {""})
-    from binlog_spark.cdc.pipeline import release_minimal
-    release_minimal(up)
