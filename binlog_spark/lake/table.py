@@ -244,10 +244,11 @@ class LakeTable:
           * incremental: stage the full batch (incl. tombstones) to
             parquet partitioned by bucket — that staging write is the one
             pipeline execution; discover touched buckets from the staging
-            dirs; then merge = old ⟕anti staged-keys ∪ staged-live, reading
-            cheap parquet instead of recomputing.  At warehouse scale
-            staging the reduced batch before the rewrite is exactly the
-            shuffle-once pattern you want.
+            dirs; then merge = per-key argmax over old ∪ staged rows of
+            the touched buckets, reading cheap parquet instead of
+            recomputing.  At warehouse scale staging the reduced batch
+            before the rewrite is exactly the shuffle-once pattern you
+            want.
         """
         from pyspark.sql import Observation
 
@@ -301,15 +302,6 @@ class LakeTable:
         commit_id = uuid.uuid4().hex[:12]
         out_dir = os.path.join(self.data_dir, commit_id)
         obs = Observation(f"merge-{commit_id}")
-        _timing = os.environ.get("SPARK_GRAFT_MERGE_TIMING") == "1"
-        _t0 = time.time()
-
-        def _tick(label: str) -> None:
-            nonlocal _t0
-            if _timing:
-                print(f"    merge[{label}] {time.time() - _t0:.2f}s",
-                      flush=True)
-                _t0 = time.time()
         # one write task per bucket: at n_buckets//2 the write stage ran
         # half the cluster idle (16 tasks on 32 cores cost 5.7 s wall at
         # sf0.1); bucket-partitioned files stay one-per-bucket-per-task
@@ -327,7 +319,6 @@ class LakeTable:
             # present_cols is merge metadata, never persisted
             (src.drop(*extra_sel).repartition(n_parts, "bucket")
              .write.partitionBy("bucket").mode("overwrite").parquet(out_dir))
-            _tick("empty-write")
             by_bucket = self._bucket_files(out_dir)
             touched = sorted(by_bucket)
             staging_dir = None
@@ -337,7 +328,6 @@ class LakeTable:
             (src.repartition(n_parts, "bucket")
              .write.partitionBy("bucket").mode("overwrite")
              .parquet(staging_dir))
-            _tick("staging-write")
             touched = sorted(self._bucket_files(staging_dir))
             touched_files = [f for b in touched
                              for f in old_buckets.get(str(b), [])]
@@ -416,24 +406,27 @@ class LakeTable:
                                .parquet(*touched_files))
                 # MERGE = per-key last-writer-wins between the existing
                 # rows (which carry their original commit order) and the
-                # batch; shuffles on the same (repo, path) hash the
-                # buckets were built from, AQE splits skewed keys.
-                # Winner search runs on the packed-BIGINT commit order
-                # (cdc.pipeline.pack_ord) — a codegen'd HashAggregate with
-                # map-side combine; a payload-carrying max_by would force a
-                # SortAggregate over every touched-bucket row.  Rows merged
-                # from non-CDC paths carry default offsets (log_file "") and
-                # pack to 0 (lowest order) rather than erroring.
+                # batch, in ONE argmax pass: max(struct(_ord, _src, row))
+                # per key, with map-side partial aggregation, so only
+                # winning rows reach the shuffle (no winner join, no
+                # dropDuplicates).  The packed commit order
+                # (cdc.pipeline.pack_ord) leads, so a batch delivered out
+                # of log order still loses to newer rows; ``_src`` (0 old,
+                # 1 staged) breaks order ties in favour of the batch.
+                # Rows merged from non-CDC paths carry default offsets
+                # (log_file "") and pack to 0 (lowest order) rather than
+                # erroring.
                 from ..cdc.pipeline import pack_ord
-                combined = (old.unionByName(staged)
+                keys = list(self.key_cols)
+                payload = [c for c in all_cols if c not in keys]
+                combined = (old.withColumn("_src", F.lit(0))
+                            .unionByName(staged.withColumn("_src", F.lit(1)))
                             .withColumn("_ord", pack_ord(strict=False)))
-                winners = (combined.groupBy(*self.key_cols)
-                           .agg(F.max("_ord").alias("_ord")))
-                merged = (combined
-                          .join(winners, on=[*self.key_cols, "_ord"],
-                                how="inner")
-                          .dropDuplicates(list(self.key_cols))
-                          .drop("_ord")
+                win = F.struct("_ord", "_src", *payload)
+                merged = (combined.groupBy(*keys).agg(F.max(win).alias("_w"))
+                          .select(*[F.col(c) if c in keys
+                                    else F.col("_w")[c].alias(c)
+                                    for c in all_cols])
                           .withColumn("bucket", self._bucket_col()))
             else:
                 if extra_sel:
@@ -441,7 +434,6 @@ class LakeTable:
                 merged = staged.withColumn("bucket", self._bucket_col())
             (merged.repartition(max(len(touched), 1), "bucket")
              .write.partitionBy("bucket").mode("overwrite").parquet(out_dir))
-            _tick("merge-write")
             by_bucket = self._bucket_files(out_dir)
 
         new_buckets = dict(old_buckets)
@@ -462,7 +454,6 @@ class LakeTable:
             bucket_rows[str(b)] = sum(_parquet_rows(f)
                                       for f in by_bucket.get(b, []))
         rows_stored = sum(bucket_rows.values())
-        _tick("footers")
 
         row = obs.get
         n_up, n_del = int(row["n"] or 0), int(row["d"] or 0)

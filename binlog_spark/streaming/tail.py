@@ -71,16 +71,18 @@ def stream_apply(spark: SparkSession, dump_dir: str, table_root: str,
     reference's blocking serverID!=0 mode, /root/reference/doc.go:23).
     ``minimal_images``: the source logs binlog_row_image=MINIMAL —
     partial images patch per column (reduce_changes_minimal + the
-    patch-aware MERGE).  Returns the StreamingQuery.
+    patch-aware MERGE).  ``broadcast_winners`` only affects that MINIMAL
+    branch: a FULL-image micro-batch decodes its blobs once and picks
+    each key's winner in one ``max(struct(_ord, row))`` pass
+    (cdc.pipeline.last_writer_wins without a key probe).  Returns the
+    StreamingQuery.
     """
     table = LakeTable(table_root, n_buckets=n_buckets)
     table.create()
     blobs = stream_blobs(spark, dump_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the micro-batch is raw blobs: decode inside the batch so the
-        # winner search can use the cheap key-only pass (same late-
-        # materialization as batch replay)
+        # the micro-batch is raw blobs: decode inside the batch
         events = decode_changes(batch_df)
         # schema discovery via a cheap distributed TABLE_MAP scan of the
         # batch's blobs — a name-less flatten_extras would EXECUTE the
@@ -92,9 +94,10 @@ def stream_apply(spark: SparkSession, dump_dir: str, table_root: str,
                 broadcast_winners=broadcast_winners,
                 key_events=decode_keys(batch_df))
         else:
-            keys = decode_keys(batch_df)
-            upserts = reduce_changes(events, salt_buckets=salt_buckets,
-                                     key_events=keys)
+            # micro-batches are a few MB: the keyed plan's extra key-only
+            # decode, winner checkpoint and join-back cost more than the
+            # one argmax shuffle they avoid
+            upserts = reduce_changes(events, salt_buckets=salt_buckets)
             upserts, _ = flatten_extras(upserts, names=extra_names)
         snap = table.merge(spark, upserts,
                            batch_id=f"stream-{checkpoint_dir}-{batch_id}")

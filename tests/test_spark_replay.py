@@ -114,6 +114,40 @@ def test_merge_idempotent_same_batch_id(spark, dump_dir, tmp_path):
     assert table.current_snapshot_id() == s1["snapshot_id"]
 
 
+def test_merge_order_tie_keeps_newer_batch(spark, tmp_path):
+    """Rows without CDC order columns all pack to order 0: on that tie
+    the incoming batch must replace the stored row, not lose to it."""
+    cols = "repo string, path string, commit string, lang string, " \
+        "content string"
+    table = LakeTable(str(tmp_path / "lake_tie"), n_buckets=8)
+    table.create()
+    for tag in ("old", "new"):
+        rows = [("r", f"p{i}", tag, "py", tag) for i in range(50)]
+        table.merge(spark, spark.createDataFrame(rows, cols), batch_id=tag)
+    got = table.read(spark).groupBy("commit", "content").count().collect()
+    assert [tuple(r) for r in got] == [("new", "new", 50)]
+
+
+def test_merge_out_of_order_batches(spark, tmp_path):
+    """MERGE is a last-writer-wins reduction on the persisted commit
+    order: applying replay's batches in REVERSE log order still yields
+    the oracle state (the commit order outranks the batch tie-break)."""
+    from binlog_spark.cdc.replay import plan_batches
+    from binlog_spark.decoder.chunks import spans_df
+    from binlog_spark.ops import binlog_demo
+    dump = binlog_demo.ensure_fixture("sf0.001")  # 4000 changes, 12 chunks
+    want = oracle.state_digest(oracle.final_state(dump))
+    spans = [tuple(r) for r in chunks_df(spark, dump).collect()]
+    batches = plan_batches(spans, 3)
+    assert len(batches) >= 3
+    table = LakeTable(str(tmp_path / "lake_ooo"), n_buckets=8)
+    table.create()
+    for i, batch in reversed(list(enumerate(batches))):
+        upserts = reduce_changes(decode_changes(spans_df(spark, batch)))
+        table.merge(spark, upserts, batch_id=f"ooo-{i}")
+    assert state_fingerprint(table.read(spark)) == want
+
+
 def test_time_travel(spark, dump_dir, tmp_path):
     root = str(tmp_path / "lake_tt")
     table = replay(spark, dump_dir, root, chunks_per_batch=40, n_buckets=8)

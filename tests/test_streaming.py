@@ -40,6 +40,24 @@ def test_stream_drain_matches_oracle(spark, dump_dir, tmp_path):
     assert state_fingerprint(table.read(spark)) == want
 
 
+def test_stream_full_image_batch_decodes_once(spark, dump_dir, tmp_path,
+                                              monkeypatch):
+    """A FULL-image micro-batch reduces with the single-pass argmax: the
+    key-only decode must never run, and the drain still matches the
+    oracle."""
+    import binlog_spark.streaming.tail as tail
+
+    def no_key_pass(*a, **kw):
+        raise AssertionError("FULL-image stream batch ran decode_keys")
+
+    monkeypatch.setattr(tail, "decode_keys", no_key_pass)
+    want = oracle.state_digest(oracle.final_state(dump_dir))
+    table = _run_drain(spark, dump_dir, str(tmp_path / "slake1"),
+                       str(tmp_path / "sckpt1"))
+    assert len(table.snapshots()) > 2  # several micro-batches merged
+    assert state_fingerprint(table.read(spark)) == want
+
+
 def test_stream_incremental_pickup_and_resume(spark, dump_dir, tmp_path):
     """Stage half the files, drain, stage the rest, drain with the SAME
     checkpoint — final state equals the full-replay state and already-
