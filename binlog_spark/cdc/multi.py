@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (IntegerType, StringType, StructField,
                                StructType)
 
-from ..decoder.chunks import chunks_df, spans_df
+from ..decoder.chunks import chunks_df, iter_chunk_bytes, spans_df
 from ..decoder.generic import decode_changes_vals
 from ..lake.table import LakeTable
 from .pipeline import pack_ord
@@ -52,56 +52,16 @@ _REGISTRY_SCHEMA = StructType([
 ])
 
 
-def _tm_bodies(data, is_head: bool):
-    """Yield each TABLE_MAP frame body in one chunk via a lean header
-    hop: one u32 size read + one type-byte test per frame, no Frame
-    objects, no CRC — the registry scan visits every frame of the dump
-    to find a handful of distinct TABLE_MAPs, so per-frame constants
-    dominate (measured 25 CPU-s → ~1 with this walk on the 100k-change
-    fixture).  Legacy (v1/v3) chunks fall back to the classic iterator."""
-    import struct
-
-    from .. import constants as C
-    from ..mysql.decode import (DEFAULT_FDE, Cur, _probe_checksum,
-                                infer_binlog_version, iter_frames,
-                                parse_fde)
-    mv = memoryview(data)
-    n = len(data)
-    pos = 4 if is_head else 0
-    if is_head and n >= pos + 13 and infer_binlog_version(
-            mv, has_magic=True) != 4:
-        for fr, _ in iter_frames(data, has_magic=is_head,
-                                 verify_crc=False):
-            if fr.event_type == C.TABLE_MAP_EVENT:
-                yield bytes(fr.body)
-        return
-    fde = DEFAULT_FDE if is_head else _probe_checksum(mv, pos)
-    cksum = fde.checksum_len
-    u32 = struct.Struct("<I").unpack_from
-    hsz = C.HEADER_SIZE
-    tm, fde_t = C.TABLE_MAP_EVENT, C.FORMAT_DESCRIPTION_EVENT
-    while pos + hsz <= n:
-        size = u32(data, pos + 9)[0]
-        end = pos + size
-        if size < hsz or end > n:
-            break
-        t = data[pos + 4]
-        if t == tm:
-            yield bytes(mv[pos + hsz:end - cksum])
-        elif t == fde_t:
-            fde = parse_fde(Cur(memoryview(bytes(
-                mv[pos + hsz:end]))), size)
-            cksum = fde.checksum_len
-        pos = end
-
-
 def _registry_rows(spans):
-    """One row per distinct TABLE_MAP across (data, is_head) byte spans."""
+    """One row per distinct TABLE_MAP across (data, is_head) byte spans
+    (decoder.frames.table_map_bodies: the shared walk, rows frames
+    length-skipped, no CRC)."""
+    from ..decoder.frames import table_map_bodies
     from ..mysql.decode import Cur, parse_table_map
     rows: dict[tuple, tuple] = {}
     seen: set[bytes] = set()
     for data, is_head in spans:
-        for key in _tm_bodies(data, is_head):
+        for key in table_map_bodies(data, is_head):
             if key in seen:
                 continue
             seen.add(key)
@@ -127,34 +87,13 @@ def _registry_batch(rows):
         names=[f.name for f in _REGISTRY_SCHEMA.fields])
 
 
-def _scan_spans(batches):
-    """mapInArrow worker: chunk spans → one row per distinct TABLE_MAP."""
-    for rb in batches:
-        d = rb.to_pydict()
-
-        def gen():
-            for dump_dir, log_file, off, ln in zip(
-                    d["dump_dir"], d["log_file"], d["chunk_off"],
-                    d["chunk_len"]):
-                with open(os.path.join(dump_dir, log_file), "rb") as f:
-                    f.seek(off)
-                    yield f.read(ln), off == 0
-
-        rows = _registry_rows(gen())
-        if rows:
-            yield _registry_batch(rows)
-
-
-def _scan_blobs(batches):
-    """mapInArrow worker: raw file blobs → one row per distinct TABLE_MAP
-    (the streaming micro-batch variant — bytes already in the row)."""
-    for rb in batches:
-        d = rb.to_pydict()
-        rows = _registry_rows(
-            (data, off == 0)
-            for off, data in zip(d["chunk_off"], d["data"]))
-        if rows:
-            yield _registry_batch(rows)
+def _scan(batches):
+    """mapInArrow worker: chunk spans, or a streaming micro-batch's raw
+    blobs → one row per distinct TABLE_MAP."""
+    rows = _registry_rows((data, off == 0)
+                          for _f, off, data in iter_chunk_bytes(batches))
+    if rows:
+        yield _registry_batch(rows)
 
 
 def _fold_registry(rows) -> dict:
@@ -176,7 +115,7 @@ def scan_table_registry(spark: SparkSession, chunks: DataFrame) -> dict:
     Distributed; column additions are monotonic (SURVEY §1.2) so the
     widest TABLE_MAP per table carries its newest schema."""
     return _fold_registry(
-        chunks.mapInArrow(_scan_spans, _REGISTRY_SCHEMA).collect())
+        chunks.mapInArrow(_scan, _REGISTRY_SCHEMA).collect())
 
 
 #: dumps at or below this many bytes have their registry scanned on the
@@ -217,11 +156,11 @@ def scan_table_registry_spans(spark: SparkSession, spans: list) -> dict:
 
 def scan_table_registry_blobs(blobs: DataFrame) -> dict:
     """Registry discovery over a STREAMING micro-batch of raw file blobs
-    (columns chunk_off, data): a small distributed frame scan — rows are
-    length-skipped, only TABLE_MAPs parse."""
+    (columns log_file, chunk_off, data): a small distributed frame scan —
+    rows are length-skipped, only TABLE_MAPs parse."""
     return _fold_registry(
-        blobs.select("chunk_off", "data")
-        .mapInArrow(_scan_blobs, _REGISTRY_SCHEMA).collect())
+        blobs.select("log_file", "chunk_off", "data")
+        .mapInArrow(_scan, _REGISTRY_SCHEMA).collect())
 
 
 def spark_type_for(mysql_type: int, meta: int, unsigned: int) -> str:

@@ -790,20 +790,20 @@ def scan_extra_columns(spans: list[tuple]) -> list[str]:
     batch — column additions are monotonic (SURVEY §1.2), so it carries
     the batch's widest schema.  Walks chunk spans from the END because a
     trailing chunk may hold only a ROTATE/format event and no TABLE_MAP
-    at all.  Milliseconds vs executing the distributed pipeline for a
-    name probe."""
+    at all; each chunk's TABLE_MAPs come from the shared frame walk
+    (decoder.frames.table_map_bodies).  Milliseconds vs executing the
+    distributed pipeline for a name probe."""
     import os
 
-    from ..mysql.decode import Cur, iter_frames, parse_table_map
-    from .. import constants as C
+    from ..decoder.frames import table_map_bodies
+    from ..mysql.decode import Cur, parse_table_map
     for dump_dir, log_file, off, ln in reversed(spans):
         with open(os.path.join(dump_dir, log_file), "rb") as f:
             f.seek(off)
             data = f.read(ln)
         last_tme = None
-        for fr, _ in iter_frames(data, has_magic=off == 0, verify_crc=False):
-            if fr.event_type == C.TABLE_MAP_EVENT:
-                last_tme = fr.body
+        for last_tme in table_map_bodies(data, off == 0):
+            pass
         if last_tme is not None:
             tme = parse_table_map(Cur(last_tme))
             return sorted({c.name for c in tme.columns
@@ -811,52 +811,21 @@ def scan_extra_columns(spans: list[tuple]) -> list[str]:
     return []
 
 
-_SCAN_SCHEMA = "ncol int, extras_json string"
-
-
-def _scan_blob_maps(batches):
-    """mapInArrow worker: per blob, the widest TABLE_MAP's extra column
-    names (rows-events are length-skipped via frame iteration)."""
-    import json as _json
-
-    import pyarrow as pa
-
-    from ..mysql.decode import Cur, iter_frames, parse_table_map
-    from .. import constants as C
-    for rb in batches:
-        d = rb.to_pydict()
-        ncols, extras = [], []
-        for off, data in zip(d["chunk_off"], d["data"]):
-            last = None
-            for fr, _ in iter_frames(data, has_magic=off == 0,
-                                     verify_crc=False):
-                if fr.event_type == C.TABLE_MAP_EVENT:
-                    last = fr.body
-            if last is None:
-                continue
-            tme = parse_table_map(Cur(last))
-            ncols.append(len(tme.columns))
-            extras.append(_json.dumps(
-                [c.name for c in tme.columns
-                 if c.name and c.name not in BASE_COLS]))
-        if ncols:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ncols, pa.int32()), pa.array(extras, pa.string())],
-                names=["ncol", "extras_json"])
-
-
 def scan_extra_columns_blobs(blobs: DataFrame) -> list[str]:
-    """Schema discovery for a STREAMING micro-batch of raw blobs: a small
-    distributed frame scan (TABLE_MAPs parsed, row bytes skipped) instead
-    of executing the decode→reduce pipeline for a distinct-key probe.
-    The widest TABLE_MAP wins (column additions are monotonic)."""
-    import json as _json
-    rows = blobs.select("chunk_off", "data") \
-        .mapInArrow(_scan_blob_maps, _SCAN_SCHEMA).collect()
-    if not rows:
+    """Schema discovery for a STREAMING micro-batch of raw blobs: the
+    widest table of the batch's TABLE_MAP registry
+    (cdc.multi.scan_table_registry_blobs — a small distributed frame
+    scan) minus the base and unnamed columns, instead of executing the
+    decode→reduce pipeline for a distinct-key probe (column additions
+    are monotonic, so the widest TABLE_MAP is the newest)."""
+    from .multi import scan_table_registry_blobs
+    registry = scan_table_registry_blobs(blobs)
+    if not registry:
         return []
-    best = max(rows, key=lambda r: r.ncol)
-    return sorted(set(_json.loads(best.extras_json)))
+    names = max((t["columns"] for t in registry.values()), key=len)
+    # the registry names an unnamed column by its ordinal, "@i"
+    return sorted({n for i, n in enumerate(names)
+                   if n != f"@{i}" and n not in BASE_COLS})
 
 
 def final_state(upserts: DataFrame,

@@ -159,8 +159,8 @@ def replay(spark: SparkSession, dump_dir: str, table_root: str, *,
         # rather than caching the event stream — a DataFrame cache build
         # costs more than a second decode pass at scale
         metrics = write_lineage(events, table_root, bid) if lineage else {}
-        snap = table.merge(spark, upserts, batch_id=bid, offsets=offsets)
-        snap.setdefault("stats", {}).update(metrics)
+        table.merge(spark, upserts, batch_id=bid, offsets=offsets,
+                    stats=metrics)
         if compact_every or compact_tombstone_ratio:
             table.maybe_compact(spark, every_n_commits=compact_every,
                                 tombstone_ratio=compact_tombstone_ratio)

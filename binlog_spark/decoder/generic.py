@@ -23,9 +23,10 @@ from pyspark.sql.types import (ArrayType, BooleanType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from .. import constants as C
-from ..mysql.decode import BinlogError, Cur, iter_frames, parse_table_map
+from ..mysql.decode import BinlogError, Cur, parse_table_map
 from .chunks import iter_chunk_bytes
 from .columnar import RowsDecoder
+from .frames import GTID, ROTATE, ROWS, TABLE_MAP, frames
 
 GENERIC_SCHEMA = StructType([
     StructField("op", StringType(), False),
@@ -110,81 +111,15 @@ def _lenenc(b, pos):
 #: decode).  Bounded by the number of distinct TABLE_MAP bodies.
 _DECODER_CACHE: dict[bytes, tuple] = {}
 
-# event-type category table (same trick as decoder.vector): one bytes
-# index replaces a set-membership chain per frame
-_G_ROWS, _G_TM, _G_GTID, _G_ROT, _G_FDE = 1, 2, 3, 4, 5
-_gcat = bytearray(256)
-for _t in C.ROWS_EVENTS:
-    _gcat[_t] = _G_ROWS
-_gcat[C.TABLE_MAP_EVENT] = _G_TM
-_gcat[C.GTID_EVENT] = _gcat[C.ANONYMOUS_GTID_EVENT] = _G_GTID
-_gcat[C.ROTATE_EVENT] = _G_ROT
-_gcat[C.FORMAT_DESCRIPTION_EVENT] = _G_FDE
-_GCAT = bytes(_gcat)
-del _gcat, _t
-
-
-def _lean_frames(data: bytes, has_magic: bool, verify_crc: bool):
-    """Yield (cat, type, body, next_pos, ts, crc_ok, fde) for the frame
-    categories decode_span_generic consumes, via one header unpack per
-    frame — no Frame objects.  CRC is verified on rows-frames only: a
-    non-rows frame's verdict never reaches an output record (the same
-    output-equivalence argument as decoder.vector, SURVEY A28).  Legacy
-    v1/v3 heads (13-byte v1 headers, no FDE) take mysql.decode.iter_frames,
-    which knows their header layouts."""
-    import struct
-    import zlib
-
-    from ..mysql.decode import (DEFAULT_FDE, _probe_checksum,
-                                infer_binlog_version, parse_fde)
-    mv = memoryview(data)
-    n = len(data)
-    pos = 4 if has_magic else 0
-    if has_magic and n >= pos + 13 and infer_binlog_version(
-            mv, has_magic=True) != 4:
-        cat = _GCAT
-        for fr, fde_now in iter_frames(data, has_magic=has_magic,
-                                       verify_crc=verify_crc):
-            c = cat[fr.event_type]
-            if c:
-                yield (c, fr.event_type, fr.body, fr.next_pos,
-                       fr.timestamp, fr.crc_ok, fde_now)
-        return
-    fde = DEFAULT_FDE if has_magic else _probe_checksum(mv, pos)
-    cksum = fde.checksum_len
-    u32 = struct.Struct("<I").unpack_from
-    crc32 = zlib.crc32
-    hsz = C.HEADER_SIZE
-    cat = _GCAT
-    while pos + hsz <= n:
-        size = u32(data, pos + 9)[0]
-        end = pos + size
-        if size < hsz or end > n:
-            break  # partial trailing event
-        c = cat[data[pos + 4]]
-        if not c:
-            pos = end
-            continue
-        if c == _G_FDE:
-            fde = parse_fde(Cur(memoryview(bytes(
-                mv[pos + hsz:end]))), size)
-            cksum = fde.checksum_len
-            pos = end
-            continue
-        ok = True
-        if c == _G_ROWS and verify_crc and cksum == 4:
-            ok = crc32(mv[pos:end - 4]) == u32(data, end - 4)[0]
-        yield (c, data[pos + 4], mv[pos + hsz:end - cksum],
-               u32(data, pos + 13)[0], u32(data, pos)[0], ok, fde)
-        pos = end
-
 
 def decode_span_generic(data: bytes, log_file: str, *,
                         has_magic: bool = False,
                         verify_crc: bool = True,
                         mode: str = "json") -> dict[str, list]:
     """Decode one chunk into columnar lists with compiled per-layout
-    readers — no per-record objects, no per-cell type dispatch.
+    readers — no per-record objects, no per-cell type dispatch.  Frames
+    come from the engine's shared walk (decoder.frames), CRC verified on
+    rows frames.
 
     Besides the schema columns the dict carries ``_tables``: one
     ``(TableMap, row count)`` pair per decoded rows-event, in output
@@ -206,9 +141,9 @@ def decode_span_generic(data: bytes, log_file: str, *,
         if key not in pres_cache:
             pres_cache[key] = _present_str(bm, ncol)
         return pres_cache[key]
-    for c, t, body, next_pos, ts, crc_ok, fde_now in _lean_frames(
+    for c, t, body, next_pos, ts, crc_ok, fde_now in frames(
             data, has_magic, verify_crc):
-        if c == _G_GTID:
+        if c == GTID:
             # manual hyphen format — identical to str(uuid.UUID(bytes=sid))
             # (lowercase hex) without the UUID object per transaction
             h = bytes(body[1:17]).hex()
@@ -216,14 +151,14 @@ def decode_span_generic(data: bytes, log_file: str, *,
             gtid = (f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:]}"
                     f":{gno}")
             seq = 0
-        elif c == _G_TM:
+        elif c == TABLE_MAP:
             key = bytes(body)
             entry = _DECODER_CACHE.get(key)
             if entry is None:
                 tme = parse_table_map(Cur(key))
                 entry = _DECODER_CACHE[key] = (tme, RowsDecoder(tme))
             tme_cache[entry[0].table_id] = entry
-        elif c == _G_ROWS:
+        elif c == ROWS:
             b = body
             pos8 = 4 if fde_now.post_header(t, 8) == 6 else 6
             tid = int.from_bytes(b[:pos8], "little")
@@ -282,7 +217,7 @@ def decode_span_generic(data: bytes, log_file: str, *,
             ex["log_pos"]([next_pos] * n)
             ex["ts_sec"]([ts] * n)
             ex["crc_ok"]([crc_ok] * n)
-        elif c == _G_ROT:
+        elif c == ROTATE:
             tme_cache.clear()
     return cols
 

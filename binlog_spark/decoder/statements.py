@@ -22,14 +22,14 @@ Flattened record (one schema for all six types):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (BooleanType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from .. import constants as C
-from ..mysql.decode import Cur, iter_frames
+from ..mysql.decode import Cur
+from .chunks import iter_chunk_bytes
+from .frames import GTID, STMT_CATS, XID, frames
 
 STATEMENT_SCHEMA = StructType([
     StructField("stmt_type", StringType(), False),
@@ -53,6 +53,9 @@ _INTVAR_KINDS = {1: "LAST_INSERT_ID", 2: "INSERT_ID"}
 def decode_span_statements(data: bytes, log_file: str, *,
                            has_magic: bool = False,
                            verify_crc: bool = True) -> dict[str, list]:
+    """Decode one chunk's statement events into columnar lists.  Frames
+    come from the engine's shared walk (decoder.frames, ``STMT_CATS``),
+    CRC verified on the statement frames the records carry."""
     import uuid as _uuid
     cols: dict[str, list] = {k: [] for k in _SCOLS}
     gtid = None
@@ -67,21 +70,19 @@ def decode_span_statements(data: bytes, log_file: str, *,
         cols["n2"].append(n2)
         cols["gtid"].append(gtid)
         cols["log_file"].append(log_file)
-        cols["log_pos"].append(fr.next_pos)
-        cols["ts_sec"].append(fr.timestamp)
-        cols["crc_ok"].append(fr.crc_ok)
+        cols["log_pos"].append(fr[3])
+        cols["ts_sec"].append(fr[4])
+        cols["crc_ok"].append(fr[5])
 
-    for fr, _fde in iter_frames(data, has_magic=has_magic,
-                                verify_crc=verify_crc):
-        t = fr.event_type
-        b = fr.body
-        if t == C.GTID_EVENT or t == C.ANONYMOUS_GTID_EVENT:
+    for fr in frames(data, has_magic, verify_crc, STMT_CATS):
+        c, t, b, fde = fr[0], fr[1], fr[2], fr[6]
+        if c == GTID:
             cur = Cur(b)
             cur.int1()
             sid = cur.bytes(16)
             gno = cur.int8()
             gtid = f"{_uuid.UUID(bytes=sid)}:{gno}"
-        elif t == C.XID_EVENT:
+        elif c == XID:
             # gtid attaches only within an open transaction: standalone
             # statements (INCIDENT, DDL) deterministically carry null
             # regardless of which chunk they land in
@@ -94,7 +95,7 @@ def decode_span_statements(data: bytes, log_file: str, *,
             # layouts are unchanged since their introduction, so only
             # QUERY branches on the version.
             schema_len = b[8]
-            if _fde.binlog_version < 4:
+            if fde.binlog_version < 4:
                 pos = 11
             else:
                 status_len = b[11] | (b[12] << 8)
@@ -163,29 +164,11 @@ def _to_batch(cols: dict[str, list]):
         names=list(_SCOLS))
 
 
-def _worker(from_blobs: bool):
-    def work(batches):
-        for rb in batches:
-            d = rb.to_pydict()
-            if from_blobs:
-                for log_file, off, data in zip(d["log_file"],
-                                               d["chunk_off"], d["data"]):
-                    cols = decode_span_statements(data, log_file,
-                                                  has_magic=off == 0)
-                    if cols["stmt_type"]:
-                        yield _to_batch(cols)
-            else:
-                for dump_dir, log_file, off, ln in zip(
-                        d["dump_dir"], d["log_file"], d["chunk_off"],
-                        d["chunk_len"]):
-                    with open(os.path.join(dump_dir, log_file), "rb") as f:
-                        f.seek(off)
-                        data = f.read(ln)
-                    cols = decode_span_statements(data, log_file,
-                                                  has_magic=off == 0)
-                    if cols["stmt_type"]:
-                        yield _to_batch(cols)
-    return work
+def _work(batches):
+    for log_file, off, data in iter_chunk_bytes(batches):
+        cols = decode_span_statements(data, log_file, has_magic=off == 0)
+        if cols["stmt_type"]:
+            yield _to_batch(cols)
 
 
 def decode_statements(chunks: DataFrame, *,
@@ -193,5 +176,4 @@ def decode_statements(chunks: DataFrame, *,
     """Chunk-span (or blob) DF → statement-event DF."""
     if partitions:
         chunks = chunks.repartition(partitions)
-    return chunks.mapInArrow(_worker("data" in chunks.columns),
-                             STATEMENT_SCHEMA)
+    return chunks.mapInArrow(_work, STATEMENT_SCHEMA)

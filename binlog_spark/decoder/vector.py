@@ -9,10 +9,11 @@ row layer.  This module avoids both for the common case
 ``(repo, path, commit, lang, content)`` table with FULL row images (the
 wire layout of /root/reference/rbr.go:246-350) — with two passes:
 
-  1. ONE fused walk over the frames: framing (one ``unpack_from`` per
-     frame), CRC32 on rows-frames only (a non-rows frame's CRC verdict
-     never reaches an output record), demux that touches only GTID /
-     TABLE_MAP / ROTATE / FDE frames, and one ``(kind, span, tx, ts,
+  1. ONE fused walk over the frames, driven by the engine's shared
+     header hop (decoder.frames.spans: one ``unpack_from`` per frame,
+     only GTID / TABLE_MAP / ROTATE / FDE / rows frames handed over):
+     CRC32 on rows-frames only (a non-rows frame's CRC verdict never
+     reaches an output record) and one ``(kind, span, tx, ts,
      next_pos, crc)`` job per rows-event;
   2. a row walk (codegen-unrolled per column-width layout, the same
      technique as decoder/columnar.py) that appends one zero-copy
@@ -47,29 +48,16 @@ import zlib
 import numpy as np
 
 from .. import constants as C
-from ..mysql.decode import (DEFAULT_FDE, Cur, _probe_checksum,
-                            infer_binlog_version, parse_fde,
-                            parse_table_map)
+from ..mysql.decode import Cur, parse_table_map
+from .frames import GTID, ROTATE, ROWS, TABLE_MAP, chunk_start, fde_at, spans
 
 _U32 = struct.Struct("<I").unpack_from
 
 #: the canonical table layout the vectorized path compiles for
 _BASE = ("repo", "path", "commit", "lang", "content")
 
-# 256-entry event-type category table: ONE bytes-index replaces the
-# set-membership chain in the frame walk's hot loop — statement frames
-# (the majority: QUERY/USER_VAR/XID ride ~2.8 frames per change on the
-# v4 fixture) fall through on `not cat` in ~4 interpreter ops
-_CAT_ROWS, _CAT_TM, _CAT_GTID, _CAT_ROT, _CAT_FDE = 1, 2, 3, 4, 5
-_cat = bytearray(256)
-for _t in C.ROWS_EVENTS:
-    _cat[_t] = _CAT_ROWS
-_cat[C.TABLE_MAP_EVENT] = _CAT_TM
-_cat[C.GTID_EVENT] = _cat[C.ANONYMOUS_GTID_EVENT] = _CAT_GTID
-_cat[C.ROTATE_EVENT] = _CAT_ROT
-_cat[C.FORMAT_DESCRIPTION_EVENT] = _CAT_FDE
-_CAT = bytes(_cat)
-# rows-event kind (0 insert / 1 update / 2 delete) and v2-ness, same trick
+# rows-event kind (0 insert / 1 update / 2 delete) and v2-ness: 256-entry
+# bytes tables, the same trick as decoder.frames' category tables
 _kind = bytearray(256)
 for _t in C.UPDATE_ROWS_EVENTS:
     _kind[_t] = 1
@@ -80,7 +68,7 @@ _v2 = bytearray(256)
 for _t in C.ROWS_EVENTS_V2:
     _v2[_t] = 1
 _ROWS_V2 = bytes(_v2)
-del _cat, _kind, _v2, _t
+del _kind, _v2, _t
 
 
 class _Fallback(Exception):
@@ -276,38 +264,25 @@ def _walker(widths: tuple, kind: int, keys: bool = False,
 def _decode(data: bytes, log_file: str, has_magic: bool,
             verify_crc: bool, keys: bool = False):
     import pyarrow as pa
-    mv = memoryview(data)
-    n = len(data)
-    pos = 4 if has_magic else 0
-    if has_magic:
-        if n >= pos + 13 and infer_binlog_version(mv, has_magic=True) != 4:
-            raise _Fallback  # v1/v3 legacy headers
-        fde = DEFAULT_FDE
-    else:
-        fde = _probe_checksum(mv, pos)
-    # resolve the real FDE up-front when the chunk leads with one — the
-    # checksum length must be known before the position walk (body ends
-    # and CRC verification depend on it)
-    if n >= pos + C.HEADER_SIZE and mv[pos + 4] == C.FORMAT_DESCRIPTION_EVENT:
-        size = _U32(data, pos + 9)[0]
-        if pos + size <= n:
-            fde = parse_fde(
-                Cur(memoryview(bytes(mv[pos + C.HEADER_SIZE:pos + size]))),
-                size)
+    start = chunk_start(data, has_magic)
+    if start is None:
+        raise _Fallback  # v1/v3 legacy headers
+    pos, fde = start
     cksum = fde.checksum_len
     if cksum not in (0, 4):
         raise _Fallback
 
     # --- fused frame walk: framing + CRC + demux in one pass ---------
-    # Only rows-frames need CRC verification here: only a ROWS frame's
+    # The shared header hop (decoder.frames.spans) hands over only the
+    # GTID / TABLE_MAP / ROTATE / FDE / rows frames; statement frames —
+    # the majority — cost it one size read and one table index.  Only
+    # rows-frames need CRC verification here: only a ROWS frame's
     # crc_ok verdict ever reaches an output record, so skipping non-rows
-    # CRC is output-equivalent and saves ~2/3 of the checksum work.  The
-    # demux is ONE bytes-table index (_CAT); statement frames — the
-    # majority — cost only the framing read plus that index.
+    # CRC is output-equivalent and saves ~2/3 of the checksum work.
+    mv = memoryview(data)
     u32 = _U32
     crc32 = zlib.crc32
     do_crc = verify_crc and cksum == 4
-    cat = _CAT
     rows_kind = _ROWS_KIND
     rows_v2 = _ROWS_V2
 
@@ -325,16 +300,8 @@ def _decode(data: bytes, log_file: str, has_magic: bool,
     post6 = {t: (fde.post_header(t, 8) == 6) for t in C.ROWS_EVENTS}
     hsz = C.HEADER_SIZE
 
-    while pos + hsz <= n:
-        size = u32(data, pos + 9)[0]
-        end = pos + size
-        if size < hsz or end > n:
-            break  # partial trailing event (cf. /root/reference/local.go:137-140)
-        c = cat[data[pos + 4]]
-        if not c:
-            pos = end
-            continue
-        if c == _CAT_ROWS:
+    for c, pos, end in spans(data, pos):
+        if c == ROWS:
             t = data[pos + 4]
             bend = end - cksum
             hdr_end = pos + hsz
@@ -347,7 +314,6 @@ def _decode(data: bytes, log_file: str, has_magic: bool,
             entry = widths_cache.get(tid, False)
             if entry is False:
                 if tid == 0x00FFFFFF:  # dummy table id: no rows
-                    pos = end
                     continue
                 # no TABLE_MAP in scope (none in the chunk, or evicted
                 # by a ROTATE): decline, so the generic decoder raises
@@ -387,14 +353,13 @@ def _decode(data: bytes, log_file: str, has_magic: bool,
                 fn = _walker(widths, kind, keys, bm, am)
                 pres = None if kind == 2 else _pres_csv(am)
             job_app((kind, bpos, bend, fn, cur_gidx, txid, pos, ok, pres))
-        elif c == _CAT_TM:
+        elif c == TABLE_MAP:
             b0, b1 = pos + hsz, end - cksum
             # a binlog emits one TABLE_MAP before EVERY rows-event and
             # they are overwhelmingly byte-identical — one zero-copy
             # memoryview compare short-circuits the bytes copy + dict
             # hash + layout probe for the repeat case
             if last_tm_body is not None and mv[b0:b1] == last_tm_body:
-                pos = end
                 continue
             body = data[b0:b1]
             tme = tme_body_cache.get(body)
@@ -403,7 +368,7 @@ def _decode(data: bytes, log_file: str, has_magic: bool,
                 tme_body_cache[body] = tme
             widths_cache[tme.table_id] = _fast_widths(tme)
             last_tm_body = body
-        elif c == _CAT_GTID:
+        elif c == GTID:
             p = pos + hsz
             h = data[p + 1:p + 17].hex()
             gno = int.from_bytes(data[p + 17:p + 25], "little")
@@ -411,18 +376,16 @@ def _decode(data: bytes, log_file: str, has_magic: bool,
                 f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:]}:{gno}")
             cur_gidx = len(gtid_strs) - 1
             txid += 1
-        elif c == _CAT_ROT:
+        elif c == ROTATE:
             widths_cache.clear()  # (reference binlog.go:42)
             last_tm_body = None
-        else:  # _CAT_FDE
-            new = parse_fde(Cur(memoryview(
-                bytes(mv[pos + hsz:end]))), size)
+        else:  # FDE
+            new = fde_at(data, pos, end)
             if new.checksum_len != cksum or new.binlog_version != 4:
                 raise _Fallback  # checksum algorithm changed mid-chunk
             fde = new
             post6 = {t2: (fde.post_header(t2, 8) == 6)
                      for t2 in C.ROWS_EVENTS}
-        pos = end
 
     if not jobs:
         return _empty_keys_batch(pa) if keys else _empty_batch(pa)

@@ -231,8 +231,12 @@ class LakeTable:
         return out
 
     def merge(self, spark: SparkSession, upserts: DataFrame, batch_id: str,
-              offsets: dict | None = None) -> dict:
+              offsets: dict | None = None,
+              stats: dict | None = None) -> dict:
         """Apply a reduced upsert batch (one row per key, op in {I,U,D}).
+
+        ``stats``: caller counts (e.g. replay's lineage totals) merged
+        into the new snapshot's ``stats`` in the same commit.
 
         Copy-on-write at bucket granularity, computed in a SINGLE pass over
         the (expensive) upsert pipeline — no DataFrame cache (its columnar
@@ -476,7 +480,7 @@ class LakeTable:
             "stats": {"upserts": n_up, "deletes": n_del,
                       "rows_stored": rows_stored,
                       "touched_buckets": len(touched),
-                      "data_files_written": written},
+                      "data_files_written": written, **(stats or {})},
             "committed_at": time.time(),
         }
         self._commit_snapshot(new_snap)

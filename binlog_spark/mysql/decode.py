@@ -687,8 +687,11 @@ def _iter_frames_legacy(mv: memoryview, pos: int, ver: int
             ts, typ = struct.unpack_from("<IB", mv, pos)
             server_id, size, next_pos, flags = struct.unpack_from(
                 "<IIIH", mv, pos + 5)
-        if size < hdr or pos + size > n:
+        if pos + size > n:
             break  # partial trailing event
+        if size < hdr:
+            raise BinlogError(f"event size {size} at offset {pos} is "
+                              f"below the {hdr}-byte header")
         body = mv[pos + hdr:pos + size]
         if typ == C.START_EVENT_V3 and len(body) >= 52:
             cur_fde = Fde(binlog_version=struct.unpack_from("<H", body)[0]
@@ -715,7 +718,9 @@ def iter_frames(data: bytes | memoryview, *, has_magic: bool = False,
     inference rule's "anything else → v3" default must not silently
     decode a checksummed v4 stream with CRC verification off.
     Mid-stream chunks without a head are assumed v4 (pre-5.0 servers
-    are never chunked by this engine's stager)."""
+    are never chunked by this engine's stager).  A size field below the
+    header length raises BinlogError; a frame running past the end of
+    ``data`` ends the iteration (partial trailing frame)."""
     mv = memoryview(data)
     pos = 4 if has_magic else 0
     if has_magic and len(mv) >= pos + 13:
@@ -743,6 +748,10 @@ def iter_frames(data: bytes | memoryview, *, has_magic: bool = False,
             "<IIIH", mv, pos + 5)
         if pos + size > n:
             break  # partial trailing event (cf. /root/reference/local.go:137-140)
+        if size < C.HEADER_SIZE:
+            # corrupt size field: a zero would re-read this frame forever
+            raise BinlogError(f"event size {size} at offset {pos} is "
+                              f"below the {C.HEADER_SIZE}-byte header")
         cksum_len = 0 if typ == C.FORMAT_DESCRIPTION_EVENT else cur_fde.checksum_len
         body_end = pos + size - cksum_len
         crc_ok = True

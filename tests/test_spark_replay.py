@@ -178,3 +178,49 @@ def test_lineage_written(spark, dump_dir, tmp_path):
     n_changes = sum(r.events_decoded for r in lin.collect())
     n_oracle = sum(1 for _ in oracle.iter_change_records(dump_dir))
     assert n_changes == n_oracle
+
+
+def test_lineage_counts_reach_the_snapshot(spark, tmp_path):
+    """Each batch's lineage totals (events decoded, events quarantined
+    for a bad CRC) are part of that batch's committed snapshot file."""
+    import json
+    import os
+
+    from binlog_spark import constants as C
+    from binlog_spark.mysql.decode import decode_chunk, iter_frames
+    d = str(tmp_path / "dump")
+    gen.generate(d, gen.GenConfig(n_changes=600, seed=31,
+                                  max_file_bytes=1 << 20),
+                 chunk_target=64 * 1024)
+    with open(os.path.join(d, "manifest.json")) as f:
+        chunks = json.load(f)["chunks"]
+    path = os.path.join(d, chunks[0][0])
+    data = bytearray(open(path, "rb").read())
+    rows = [fr.start for fr, _ in iter_frames(bytes(data), has_magic=True)
+            if fr.event_type in C.ROWS_EVENTS]
+    data[rows[len(rows) // 2] + 40] ^= 0x01  # stays ASCII
+    with open(path, "wb") as f:
+        f.write(data)
+    want = {"events_decoded": 0, "events_quarantined": 0}
+    for log_file, off, ln in chunks:
+        with open(os.path.join(d, log_file), "rb") as f:
+            f.seek(off)
+            recs = decode_chunk(f.read(ln), log_file, has_magic=off == 0)
+        want["events_decoded"] += len(recs)
+        want["events_quarantined"] += sum(not r.crc_ok for r in recs)
+    assert want["events_quarantined"] > 0
+
+    root = str(tmp_path / "lake")
+    replay(spark, d, root, chunks_per_batch=3, n_buckets=4)
+    snap_dir = os.path.join(root, "snapshots")
+    got = {"events_decoded": 0, "events_quarantined": 0}
+    n_batches = 0
+    for name in os.listdir(snap_dir):
+        with open(os.path.join(snap_dir, name)) as f:
+            snap = json.load(f)
+        if snap.get("batch_id"):
+            n_batches += 1
+            for k in got:
+                got[k] += snap["stats"][k]
+    assert n_batches > 1
+    assert got == want
