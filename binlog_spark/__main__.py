@@ -84,7 +84,6 @@ def cmd_replay(args) -> None:
     res = replay_throughput(spark, args.dir, args.lake,
                             chunks_per_batch=args.batch_chunks,
                             n_buckets=args.buckets,
-                            salt_buckets=args.salt,
                             minimal_images=args.minimal)
     print(json.dumps(res))
 
@@ -189,7 +188,6 @@ def main(argv: list[str] | None = None) -> None:
     r.add_argument("lake")
     r.add_argument("--batch-chunks", type=int, default=None)
     r.add_argument("--buckets", type=int, default=32)
-    r.add_argument("--salt", type=int, default=0)
     r.add_argument("--minimal", action="store_true",
                    help="dump was written with binlog_row_image=MINIMAL"
                         " (partial images patch per column)")

@@ -36,11 +36,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (IntegerType, StringType, StructField,
                                StructType)
 
-from ..decoder.chunks import chunks_df, iter_chunk_bytes, spans_df
+from ..decoder.chunks import (GENERIC_SPAN_TARGET, chunks_df,
+                              decode_parallelism, iter_chunk_bytes,
+                              manifest_wide_order, spans_df)
 from ..decoder.generic import decode_changes_vals
 from ..lake.table import LakeTable
 from .pipeline import pack_ord
-from .replay import _batch_id, plan_batches
+from .replay import _batch_id, batch_plan, plan_batches
 
 _REGISTRY_SCHEMA = StructType([
     StructField("table_schema", StringType(), False),
@@ -146,7 +148,6 @@ def scan_table_registry_spans(spark: SparkSession, spans: list) -> dict:
                             columns_json=t[2], pk_json=t[3],
                             types_json=t[4], ncol=t[5])
             for t in _registry_rows(gen()).values())
-    from ..decoder.chunks import GENERIC_SPAN_TARGET, decode_parallelism
     cdf = spans_df(spark, spans)
     parts = decode_parallelism(spark, spans, target=GENERIC_SPAN_TARGET)
     if parts:
@@ -461,30 +462,14 @@ def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
                        offsets: dict | None = None,
                        broadcast_winners: bool = True,
                        wide_order: bool = False,
-                       partial_tables: set | None = None) -> None:
+                       partial_tables: set) -> None:
     """Merge one staged batch (parquet partitioned by schema/table) into
     every table — shared by batch replay and the streaming tail.
 
-    Tables with MINIMAL (partial) row images in this batch route to the
-    per-column reduction; FULL tables keep the cheap row-level winner
-    search.  ``partial_tables``: the (schema, table) set stage_events
-    observed during the staging write; when None (a caller that staged
-    out-of-band), one column-pruned scan of the staged parquet's two
-    presence strings decides — not a per-table probe job."""
-    # a batch of only statement/DDL transactions (or all-bad-CRC rows)
-    # stages ZERO row events: the partitioned dir holds no part files
-    # and parquet can't infer a schema from it — every table then takes
-    # the empty-merge branch below, which still commits the batch id
-    if partial_tables is None:
-        has_rows = os.path.isdir(staging) and any(
-            n.startswith("table_schema=") for n in os.listdir(staging))
-        partial_tables = set() if not has_rows else {
-            (r.table_schema, r.table_name)
-            for r in (spark.read.parquet(staging)
-                      .where(F.col("after_present").isNotNull()
-                             | F.col("before_present").isNotNull())
-                      .select("table_schema", "table_name")
-                      .distinct().collect())}
+    Tables in ``partial_tables`` — the (schema, table) pairs with
+    MINIMAL (partial) row images that stage_events observed during the
+    staging write — route to the per-column reduction; FULL tables keep
+    the cheap row-level winner search."""
 
     def apply_table(item) -> None:
         (sch, tbl), t = item
@@ -493,6 +478,10 @@ def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
         info = registry[(sch, tbl)]
         part = os.path.join(staging, f"table_schema={sch}",
                             f"table_name={tbl}")
+        # a table with no row events in this batch (a batch of only
+        # statement/DDL transactions or all-bad-CRC rows stages none at
+        # all, and parquet can't infer a schema from an empty dir) still
+        # commits the batch id with an empty merge
         if not os.path.isdir(part):
             types = {c: spark_type_for(ty[0], ty[1], ty[2])
                      for c, ty in zip(info["columns"], info["types"])}
@@ -524,9 +513,30 @@ def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
             apply_table(item)
 
 
+def stage_and_apply(spark: SparkSession, chunks: DataFrame, staging: str,
+                    registry: dict, tables: dict, bid: str, *,
+                    partitions: int | None = None,
+                    est_bytes: int | None = None,
+                    offsets: dict | None = None,
+                    broadcast_winners: bool,
+                    wide_order: bool) -> None:
+    """One multi-table batch — the body batch replay and the streaming
+    tail share: ONE generic decode of ``chunks`` (span or blob rows),
+    staged partitioned by table so every per-table reduction reads only
+    its own partition dirs, then the per-table apply; the staging dir is
+    removed afterwards."""
+    events = decode_changes_vals(chunks, partitions=partitions)
+    partials = stage_events(events, staging, est_bytes=est_bytes)
+    apply_staged_batch(spark, staging, registry, tables, bid,
+                       offsets=offsets,
+                       broadcast_winners=broadcast_winners,
+                       wide_order=wide_order,
+                       partial_tables=partials)
+    shutil.rmtree(staging, ignore_errors=True)
+
+
 def replay_generic(spark: SparkSession, dump_dir: str, lake_root: str, *,
                    chunks_per_batch: int | None = None,
-                   partitions: int | None = None,
                    n_buckets: int = 8,
                    broadcast_winners: bool | None = None,
                    wide_order: bool | None = None) -> dict:
@@ -538,17 +548,12 @@ def replay_generic(spark: SparkSession, dump_dir: str, lake_root: str, *,
     mid-batch (a crash between two tables' merges re-runs the batch; the
     already-committed table skips it).
 
-    ``wide_order``: None auto-enables the DECIMAL order key from the
-    manifest's ``max_tx_rows`` — same contract as cdc.replay.replay
-    (ADVICE r5: the multi path previously always used the clamped
-    narrow order)."""
+    ``broadcast_winners`` and ``wide_order``: None derives them the way
+    cdc.replay.replay does — per batch from its input bytes
+    (cdc.replay.batch_plan), and from the manifest's ``max_tx_rows``
+    (decoder.chunks.manifest_wide_order)."""
     if wide_order is None:
-        try:
-            from ..decoder.chunks import read_manifest
-            wide_order = read_manifest(dump_dir).get(
-                "max_tx_rows", 0) > 32767
-        except (OSError, ValueError, KeyError):
-            wide_order = False
+        wide_order = manifest_wide_order(dump_dir)
     all_chunks = [tuple(r) for r in chunks_df(spark, dump_dir).collect()]
     # small dumps: header-hop the registry on the driver (no Spark job);
     # larger dumps: distributed scan with byte-derived task sizing
@@ -559,33 +564,12 @@ def replay_generic(spark: SparkSession, dump_dir: str, lake_root: str, *,
         bid = _batch_id(dump_dir, i, [s[1:] for s in spans])
         if all(bid in t.committed_batch_ids() for t in tables.values()):
             continue
-        cdf = spans_df(spark, spans)
-        if broadcast_winners is None:
-            from .pipeline import BROADCAST_WINNERS_MIN_BYTES
-            bw = (sum(int(sp[3]) for sp in spans)
-                  >= BROADCAST_WINNERS_MIN_BYTES)
-        else:
-            bw = broadcast_winners
-        if partitions is None:
-            from ..decoder.chunks import (GENERIC_SPAN_TARGET,
-                                          decode_parallelism)
-            parts = decode_parallelism(spark, spans,
-                                       target=GENERIC_SPAN_TARGET)
-        else:
-            parts = partitions
-        events = decode_changes_vals(cdf, partitions=parts)
-        staging = os.path.join(lake_root, f".batch-{bid}")
-        # ONE decode execution per batch: stage partitioned by table so
-        # every per-table reduction reads only its own partition dirs
-        partials = stage_events(events, staging,
-                                est_bytes=sum(int(s[3]) for s in spans))
-        last_file = max(s[1] for s in spans)
-        last_end = max(s[2] + s[3] for s in spans if s[1] == last_file)
-        apply_staged_batch(spark, staging, registry, tables, bid,
-                           offsets={"log_file": last_file,
-                                    "next_pos": int(last_end)},
-                           broadcast_winners=bw,
-                           wide_order=wide_order,
-                           partial_tables=partials)
-        shutil.rmtree(staging, ignore_errors=True)
+        bw, parts, offsets = batch_plan(spark, spans, GENERIC_SPAN_TARGET,
+                                        broadcast_winners)
+        stage_and_apply(spark, spans_df(spark, spans),
+                        os.path.join(lake_root, f".batch-{bid}"),
+                        registry, tables, bid, partitions=parts,
+                        est_bytes=sum(int(s[3]) for s in spans),
+                        offsets=offsets, broadcast_winners=bw,
+                        wide_order=wide_order)
     return tables

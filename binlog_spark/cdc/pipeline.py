@@ -4,10 +4,11 @@ All-declarative (Catalyst-optimizable) implementations of the stages the
 reference leaves to its caller loop (/root/reference/doc.go:33-66), designed
 for the shuffle profile at 10^10 events:
 
-  * GTID dedup           — one shuffle on (gtid, seq_in_tx)
+  * GTID dedup           — subsumed by the winner search: redelivered
+                           replicas share their packed commit order
   * last-writer-wins     — ``max_by`` aggregation (partial/map-side combine;
-                           cheaper than a window sort at scale)
-  * hot-key salting      — optional two-stage aggregation for skewed keys
+                           cheaper than a window sort at scale; a hot key
+                           collapses to one row per map task)
   * key-change handling  — updates whose key moved emit a tombstone at the
                            old key (generalizes /root/reference/rbr.go:344-349)
 """
@@ -27,13 +28,6 @@ DATA_COLS = ("commit", "lang", "content")
 
 def _order_struct() -> F.Column:
     return F.struct(*[F.col(c) for c in ORDER_COLS])
-
-
-def dedup_gtid(events: DataFrame) -> DataFrame:
-    """Exactly-once at the event level: per-GTID, per-row dedup
-    (BASELINE.json:6; the reference skips GTID bodies —
-    /root/reference/events.go:354 — this is the gap the engine fills)."""
-    return events.dropDuplicates(["gtid", "seq_in_tx"])
 
 
 def quarantine_bad_crc(events: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -87,9 +81,10 @@ def pack_ord(*, strict: bool = True, wide: bool = False) -> F.Column:
     with NO seq clamp, for single transactions beyond 32767 rows on one
     key (the reference streams rows lazily and has no such limit —
     /root/reference/rbr.go:308-350).  Decimal aggregation buffers are
-    fixed-width, so the winner search stays a HashAggregate; replay
-    auto-enables this when the dump's manifest records
-    ``max_tx_rows > 32767``, and callers of foreign dumps opt in via
+    fixed-width, so the winner search stays a HashAggregate; the replay
+    and streaming entry points auto-enable this when the dump's manifest
+    records ``max_tx_rows > 32767`` (decoder.chunks.manifest_wide_order),
+    and callers of foreign dumps opt in via
     ``reduce_changes(..., wide_order=True)``."""
     raw_no = F.regexp_extract("log_file", r"(\d+)$", 1)
     # non-strict rows may carry a non-numeric log_file (pre-CDC lake
@@ -122,7 +117,7 @@ _OUT_COLS = (*KEY_COLS, "op", *DATA_COLS, "extra_json", *ORDER_COLS,
              "gtid", "ts_sec")
 
 
-def last_writer_wins(events: DataFrame, *, salt_buckets: int = 0,
+def last_writer_wins(events: DataFrame, *,
                      key_events: DataFrame | None = None,
                      broadcast_winners: bool = True,
                      wide_order: bool = False) -> DataFrame:
@@ -156,35 +151,17 @@ def last_writer_wins(events: DataFrame, *, salt_buckets: int = 0,
     shuffled the same winner rows, so no extra payload bytes move.
 
     Hot keys need no salting in either plan: map-side combine collapses
-    a hot key's updates to one row per task.  ``salt_buckets`` is kept
-    for the pathological case and applies a two-stage max.
+    a hot key's updates to one row per task.
     """
     if key_events is None:
         full = events.withColumn("_ord", pack_ord(wide=wide_order))
         out_fields = [c for c in _OUT_COLS if c not in KEY_COLS]
         w = F.struct(F.col("_ord"), *[F.col(c) for c in out_fields])
-        if salt_buckets > 0:
-            salted = full.withColumn(
-                "_salt", F.pmod(F.xxhash64("log_pos", "seq_in_tx"),
-                                F.lit(salt_buckets)))
-            stage1 = (salted.groupBy(*KEY_COLS, "_salt")
-                      .agg(F.max(w).alias("_w")))
-            agg = stage1.groupBy(*KEY_COLS).agg(F.max("_w").alias("_w"))
-        else:
-            agg = full.groupBy(*KEY_COLS).agg(F.max(w).alias("_w"))
+        agg = full.groupBy(*KEY_COLS).agg(F.max(w).alias("_w"))
         return agg.select(
             *KEY_COLS, *[F.col("_w")[c].alias(c) for c in out_fields])
     keys = key_events.withColumn("_ord", pack_ord(wide=wide_order))
-    if salt_buckets > 0:
-        salted = keys.withColumn(
-            "_salt", F.pmod(F.xxhash64("log_pos", "seq_in_tx"),
-                            F.lit(salt_buckets)))
-        stage1 = (salted.groupBy(*KEY_COLS, "_salt")
-                  .agg(F.max("_ord").alias("_ord")))
-        winners = (stage1.groupBy(*KEY_COLS)
-                   .agg(F.max("_ord").alias("_ord")))
-    else:
-        winners = keys.groupBy(*KEY_COLS).agg(F.max("_ord").alias("_ord"))
+    winners = keys.groupBy(*KEY_COLS).agg(F.max("_ord").alias("_ord"))
     if broadcast_winners:
         # as a bare broadcast child the winner agg's FINAL step runs as
         # ONE collect task merging every map task's combine output
@@ -199,35 +176,29 @@ def last_writer_wins(events: DataFrame, *, salt_buckets: int = 0,
             .select(*_OUT_COLS))
 
 
-def reduce_changes(events: DataFrame, *, salt_buckets: int = 0,
-                   dedup: bool = False,
+def reduce_changes(events: DataFrame, *,
                    key_events: DataFrame | None = None,
                    broadcast_winners: bool = True,
                    wide_order: bool = False) -> DataFrame:
-    """Full reduction: quarantine → [dedup] → tombstones → last-writer-wins.
+    """Full reduction: quarantine → tombstones → last-writer-wins.
 
     Output: one row per touched key with ``op`` in {I,U,D} — exactly the
     upsert batch the lake MERGE consumes.
 
-    ``dedup=False`` is the default ON PURPOSE: at-least-once redelivery
-    produces byte-identical records with identical (log_file, log_pos,
-    seq_in_tx) order keys, so the winner join already yields the same
-    result — an explicit dropDuplicates would add a second full shuffle
-    of the event stream for no semantic gain (this is the exactly-once
-    argument: identical-replica idempotence here, batch-id idempotence at
-    the sink).  Set ``dedup=True`` only for streams that can re-deliver
-    *conflicting* payloads under one (gtid, seq)."""
+    No GTID dedup pass: at-least-once redelivery produces byte-identical
+    records with identical (log_file, log_pos, seq_in_tx) order keys, so
+    the winner search already yields the same result — a dropDuplicates
+    would add a second full shuffle of the event stream for no semantic
+    gain (this is the exactly-once argument: identical-replica
+    idempotence here, batch-id idempotence at the sink)."""
     good, _bad = quarantine_bad_crc(events)
-    if dedup:
-        good = dedup_gtid(good)
     good = with_key_change_tombstones(good)
     if key_events is not None:
         key_good = key_events.filter(F.col("crc_ok"))
         key_good = with_key_change_tombstones(key_good)
     else:
         key_good = None
-    return last_writer_wins(good, salt_buckets=salt_buckets,
-                            key_events=key_good,
+    return last_writer_wins(good, key_events=key_good,
                             broadcast_winners=broadcast_winners,
                             wide_order=wide_order)
 
@@ -751,31 +722,15 @@ def _minimal_core(good: DataFrame, payload: list[str], value_of,
 
 
 def flatten_extras(upserts: DataFrame,
-                   names: list[str] | None = None, *,
-                   discover: bool = False) -> tuple[DataFrame, list[str]]:
+                   names: list[str]) -> tuple[DataFrame, list[str]]:
     """Promote schema-evolution extras (the ``extra_json`` map) to real
     columns.
 
-    Pass ``names`` when known (see ``scan_extra_columns`` — a driver-side
-    TABLE_MAP scan, milliseconds — or ``scan_extra_columns_blobs`` for
-    streaming micro-batches).  The name-less fallback is a distinct-key
-    probe that EXECUTES the upsert pipeline once just to discover column
-    names; it must be requested explicitly with ``discover=True`` so a
-    caller can't pay that execution by accident."""
+    ``names`` come from a TABLE_MAP scan — ``scan_extra_columns`` on the
+    driver (milliseconds) or ``scan_extra_columns_blobs`` for streaming
+    micro-batches — never from executing the upsert pipeline."""
     if "extra_json" not in upserts.columns:
         return upserts, []
-    if names is None:
-        if not discover:
-            raise ValueError(
-                "flatten_extras: no column names given; pass names from "
-                "scan_extra_columns/scan_extra_columns_blobs (driver-side"
-                " TABLE_MAP scan), or opt into the pipeline-executing "
-                "probe with discover=True")
-        names = sorted(
-            r[0] for r in upserts
-            .filter(F.col("extra_json").isNotNull())
-            .select(F.explode(F.json_object_keys("extra_json")))
-            .distinct().collect())
     for n in names:
         upserts = upserts.withColumn(
             n, F.get_json_object("extra_json", f"$.{n}"))
@@ -829,18 +784,11 @@ def scan_extra_columns_blobs(blobs: DataFrame) -> list[str]:
 
 
 def final_state(upserts: DataFrame,
-                extra_names: list[str] | None = None, *,
-                discover: bool = False) -> DataFrame:
+                extra_names: list[str]) -> DataFrame:
     """Terminal state of an empty-start replay: drop tombstones, promote
-    schema-evolution extras.
-
-    Pass ``extra_names`` (from the driver-side TABLE_MAP scan,
-    scan_extra_columns) whenever the chunk spans are at hand; the
-    name-less fallback probe EXECUTES the upsert pipeline once just to
-    discover column names and must be opted into with
-    ``discover=True`` (see flatten_extras)."""
-    flat, extras = flatten_extras(upserts, names=extra_names,
-                                  discover=discover)
+    schema-evolution extras named by ``extra_names`` (the driver-side
+    TABLE_MAP scan, scan_extra_columns; see flatten_extras)."""
+    flat, extras = flatten_extras(upserts, names=extra_names)
     return (flat.filter(F.col("op") != "D")
             .select(*KEY_COLS, *DATA_COLS, *extras))
 

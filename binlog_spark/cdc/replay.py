@@ -23,11 +23,13 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..decoder.chunks import chunks_df, spans_df
+from ..decoder.chunks import (DECODE_SPAN_TARGET, chunks_df,
+                              decode_parallelism, manifest_wide_order,
+                              spans_df)
 from ..decoder.kernel import decode_changes, decode_keys
 from ..lake.table import LakeTable
-from .pipeline import (flatten_extras, reduce_changes,
-                       reduce_changes_minimal,
+from .pipeline import (BROADCAST_WINNERS_MIN_BYTES, flatten_extras,
+                       reduce_changes, reduce_changes_minimal,
                        scan_extra_columns)
 
 
@@ -41,6 +43,27 @@ def plan_batches(chunks: list[tuple], chunks_per_batch: int | None) -> list[list
         return [chunks] if chunks else []
     return [chunks[i:i + chunks_per_batch]
             for i in range(0, len(chunks), chunks_per_batch)]
+
+
+def batch_plan(spark: SparkSession, spans: list[tuple], target: int,
+               broadcast_winners: bool | None
+               ) -> tuple[bool, int | None, dict]:
+    """The per-batch settings every chunk-span entry point derives from
+    its batch, as ``(broadcast_winners, partitions, offsets)``: the
+    winner plan (broadcast the per-key winner sets only once the batch
+    holds >= BROADCAST_WINNERS_MIN_BYTES of binlog input, unless the
+    caller fixed ``broadcast_winners`` to a bool), the decode partition
+    count for the decoder's bytes-per-task ``target``
+    (decoder.chunks.decode_parallelism) and the commit offsets — the end
+    of the batch's last chunk in its newest file."""
+    if broadcast_winners is None:
+        broadcast_winners = (sum(int(s[3]) for s in spans)
+                             >= BROADCAST_WINNERS_MIN_BYTES)
+    last_file = max(s[1] for s in spans)
+    last_end = max(s[2] + s[3] for s in spans if s[1] == last_file)
+    return (broadcast_winners,
+            decode_parallelism(spark, spans, target=target),
+            {"log_file": last_file, "next_pos": int(last_end)})
 
 
 def write_lineage(events: DataFrame, table_root: str, batch_id: str) -> dict:
@@ -62,8 +85,8 @@ def write_lineage(events: DataFrame, table_root: str, batch_id: str) -> dict:
 
 
 def replay(spark: SparkSession, dump_dir: str, table_root: str, *,
-           chunks_per_batch: int | None = None, salt_buckets: int = 0,
-           n_buckets: int = 32, partitions: int | None = None,
+           chunks_per_batch: int | None = None,
+           n_buckets: int = 32,
            lineage: bool = True,
            compact_every: int | None = None,
            compact_tombstone_ratio: float | None = None,
@@ -93,18 +116,14 @@ def replay(spark: SparkSession, dump_dir: str, table_root: str, *,
     ``wide_order``: DECIMAL order key with no 32767 seq clamp, for
     single transactions beyond 32k rows on one key (pack_ord wide).
     None (default) auto-enables from the dump manifest's
-    ``max_tx_rows``; pass True explicitly for foreign dumps without a
-    manifest.  Chunk spans are transaction-aligned, so a transaction
-    never splits across batches and the lake MERGE's cross-batch winner
-    search stays on the narrow packed BIGINT.
+    ``max_tx_rows`` (decoder.chunks.manifest_wide_order); pass True
+    explicitly for foreign dumps without a manifest.  Chunk spans are
+    transaction-aligned, so a transaction never splits across batches
+    and the lake MERGE's cross-batch winner search stays on the narrow
+    packed BIGINT.
     """
     if wide_order is None:
-        try:
-            from ..decoder.chunks import read_manifest
-            wide_order = read_manifest(dump_dir).get(
-                "max_tx_rows", 0) > 32767
-        except (OSError, ValueError, KeyError):
-            wide_order = False
+        wide_order = manifest_wide_order(dump_dir)
     table = LakeTable(table_root, n_buckets=n_buckets)
     table.create()
     all_chunks = [tuple(r) for r in
@@ -117,44 +136,28 @@ def replay(spark: SparkSession, dump_dir: str, table_root: str, *,
         if bid in committed:
             continue
         cdf = spans_df(spark, spans)
-        if broadcast_winners is None:
-            from .pipeline import BROADCAST_WINNERS_MIN_BYTES
-            bw = (sum(int(sp[3]) for sp in spans)
-                  >= BROADCAST_WINNERS_MIN_BYTES)
-        else:
-            bw = broadcast_winners
-        if partitions is None:
-            from ..decoder.chunks import decode_parallelism
-            parts = decode_parallelism(spark, spans)
-        else:
-            parts = partitions
+        bw, parts, offsets = batch_plan(spark, spans, DECODE_SPAN_TARGET,
+                                        broadcast_winners)
         events = decode_changes(cdf, partitions=parts)
+        # late materialization: the FULL winner search and the MINIMAL
+        # key-move edge probe run on the cheap key-only decode, so the
+        # payload decode is consumed once
+        keys = decode_keys(cdf, partitions=parts)
         # schema evolution: extras observed in this batch become real
         # columns; the MERGE widens the table schema accordingly.  Names
         # come from a driver-side TABLE_MAP scan — never from executing
         # the pipeline.
         extra_names = scan_extra_columns(spans)
         if minimal_images:
-            # key-only decode feeds the edge probe so payload bytes are
-            # decoded once (into the reduction's stream checkpoint)
             upserts = reduce_changes_minimal(
                 events, extra_names=extra_names,
-                broadcast_winners=bw,
-                key_events=decode_keys(cdf, partitions=parts),
+                broadcast_winners=bw, key_events=keys,
                 wide_order=wide_order)
         else:
-            # late materialization: winner search runs on the cheap
-            # key-only decode; the full decode is joined against the
-            # winner set once
-            keys = decode_keys(cdf, partitions=parts)
-            upserts = reduce_changes(events, salt_buckets=salt_buckets,
-                                     key_events=keys,
+            upserts = reduce_changes(events, key_events=keys,
                                      broadcast_winners=bw,
                                      wide_order=wide_order)
             upserts, _new_cols = flatten_extras(upserts, names=extra_names)
-        last_file = max(s[1] for s in spans)
-        last_end = max(s[2] + s[3] for s in spans if s[1] == last_file)
-        offsets = {"log_file": last_file, "next_pos": int(last_end)}
         # lineage re-runs the decode (cheap, embarrassingly parallel)
         # rather than caching the event stream — a DataFrame cache build
         # costs more than a second decode pass at scale

@@ -35,6 +35,18 @@ def read_manifest(dump_dir: str) -> dict:
         return json.load(f)
 
 
+def manifest_wide_order(dump_dir: str) -> bool:
+    """Whether a dump needs the wide DECIMAL order key: its manifest
+    records a transaction beyond the 32767-row seq clamp of the narrow
+    packed order (cdc.pipeline.pack_ord).  A dump with no readable
+    manifest gets the narrow order; callers of such dumps pass
+    ``wide_order=True`` themselves."""
+    try:
+        return read_manifest(dump_dir).get("max_tx_rows", 0) > 32767
+    except (OSError, ValueError, KeyError):
+        return False
+
+
 import re as _re
 
 _FILE_NO = _re.compile(r"(\d+)$")

@@ -29,7 +29,6 @@ from json.encoder import encode_basestring_ascii as _esc
 from operator import itemgetter
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
@@ -225,8 +224,3 @@ def decode_keys(chunks: DataFrame, *, partitions: int | None = None) -> DataFram
     if partitions:
         chunks = chunks.repartition(partitions)
     return chunks.mapInArrow(_make_worker(True), KEY_SCHEMA)
-
-
-def with_ts(events: DataFrame) -> DataFrame:
-    return events.withColumn("ts", F.to_timestamp(F.from_unixtime("ts_sec")))
-

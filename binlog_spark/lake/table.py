@@ -621,9 +621,8 @@ class LakeTable:
 
 
 def _parquet_rows(path: str) -> int:
-    """Row count from the parquet footer — metadata-only, no data read."""
+    """Row count from the parquet footer — metadata-only, no data read.
+    A missing or corrupt file raises: ``rows_stored`` feeds the
+    tombstone-ratio retention trigger and must not undercount."""
     import pyarrow.parquet as pq
-    try:
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return 0
+    return pq.ParquetFile(path).metadata.num_rows

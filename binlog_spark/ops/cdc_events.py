@@ -21,8 +21,7 @@ def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-identity dedup: first event per (user_id, event_type) in
-    (ts, event_id) order — the (gtid, seq) dedup shape
-    (binlog_spark.cdc.pipeline.dedup_gtid)."""
+    (ts, event_id) order — the (gtid, seq) dedup shape."""
     ev = _ev(spark, sf_dir)
     w = Window.partitionBy("user_id", "event_type").orderBy("event_id")
     return (ev.withColumn("rn", F.row_number().over(w))

@@ -16,15 +16,19 @@ the sink — either alone survives a crash between the two.
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cdc.multi import (ensure_tables, scan_table_registry_blobs,
+                         stage_and_apply)
 from ..cdc.pipeline import (flatten_extras, reduce_changes,
                             reduce_changes_minimal,
                             scan_extra_columns_blobs)
-from ..decoder.kernel import CHANGE_SCHEMA, decode_changes, decode_keys
+from ..decoder.chunks import manifest_wide_order
+from ..decoder.kernel import decode_changes, decode_keys
 from ..lake.table import LakeTable
 
 _BINARY_FILE_SCHEMA = ("path string, modificationTime timestamp, "
@@ -49,16 +53,24 @@ def stream_blobs(spark: SparkSession, dump_dir: str,
         F.col("content").alias("data"))
 
 
-def stream_decoded(spark: SparkSession, dump_dir: str,
-                   max_files_per_trigger: int = 16) -> DataFrame:
-    """Streaming DataFrame of decoded change events from a staging dir."""
-    return decode_changes(stream_blobs(spark, dump_dir,
-                                       max_files_per_trigger))
+def _start(spark: SparkSession, dump_dir: str, checkpoint_dir: str,
+           apply_batch: Callable[[DataFrame, int], None],
+           available_now: bool, processing_interval: str):
+    """Run ``apply_batch`` on every micro-batch of the dir's blobs:
+    drain what is visible and stop, or keep tailing on a processing-time
+    trigger.  Returns the StreamingQuery."""
+    trigger = ({"availableNow": True} if available_now
+               else {"processingTime": processing_interval})
+    return (stream_blobs(spark, dump_dir).writeStream
+            .foreachBatch(apply_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(**trigger)
+            .start())
 
 
 def stream_apply(spark: SparkSession, dump_dir: str, table_root: str,
                  checkpoint_dir: str, *,
-                 n_buckets: int = 32, salt_buckets: int = 0,
+                 n_buckets: int = 32,
                  available_now: bool = True,
                  processing_interval: str = "5 seconds",
                  minimal_images: bool = False,
@@ -74,12 +86,14 @@ def stream_apply(spark: SparkSession, dump_dir: str, table_root: str,
     patch-aware MERGE).  ``broadcast_winners`` only affects that MINIMAL
     branch: a FULL-image micro-batch decodes its blobs once and picks
     each key's winner in one ``max(struct(_ord, row))`` pass
-    (cdc.pipeline.last_writer_wins without a key probe).  Returns the
-    StreamingQuery.
+    (cdc.pipeline.last_writer_wins without a key probe).  The order key
+    is the one batch replay uses: wide when the dump's manifest records
+    a transaction beyond the 32767-row seq clamp
+    (decoder.chunks.manifest_wide_order).  Returns the StreamingQuery.
     """
     table = LakeTable(table_root, n_buckets=n_buckets)
     table.create()
-    blobs = stream_blobs(spark, dump_dir)
+    wide_order = manifest_wide_order(dump_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # the micro-batch is raw blobs: decode inside the batch
@@ -92,26 +106,20 @@ def stream_apply(spark: SparkSession, dump_dir: str, table_root: str,
             upserts = reduce_changes_minimal(
                 events, extra_names=extra_names,
                 broadcast_winners=broadcast_winners,
-                key_events=decode_keys(batch_df))
+                key_events=decode_keys(batch_df), wide_order=wide_order)
         else:
             # micro-batches are a few MB: the keyed plan's extra key-only
             # decode, winner checkpoint and join-back cost more than the
             # one argmax shuffle they avoid
-            upserts = reduce_changes(events, salt_buckets=salt_buckets)
+            upserts = reduce_changes(events, wide_order=wide_order)
             upserts, _ = flatten_extras(upserts, names=extra_names)
         snap = table.merge(spark, upserts,
                            batch_id=f"stream-{checkpoint_dir}-{batch_id}")
         if on_batch is not None:
             on_batch(batch_id, snap)
 
-    writer = (blobs.writeStream
-              .foreachBatch(apply_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_interval)
-    return writer.start()
+    return _start(spark, dump_dir, checkpoint_dir, apply_batch,
+                  available_now, processing_interval)
 
 
 def stream_apply_multi(spark: SparkSession, dump_dir: str, lake_root: str,
@@ -127,54 +135,31 @@ def stream_apply_multi(spark: SparkSession, dump_dir: str, lake_root: str,
     caller, /root/reference/doc.go:47-56).
 
     Per micro-batch: registry discovery from the batch's TABLE_MAPs (a
-    table first seen mid-stream gets its lake table created then), ONE
-    generic decode staged partitioned by (schema, table), then the same
-    per-table routed apply as batch replay — FULL tables take the
-    row-level winner search, tables with MINIMAL partial images the
-    per-column reduction.  Exactly-once is double-keyed per table:
-    streaming checkpoint at the source, batch-id idempotence at each
-    table's snapshot log.  Returns the StreamingQuery."""
-    import os as _os
-    import shutil as _shutil
-
-    from ..cdc.multi import (apply_staged_batch, ensure_tables,
-                             scan_table_registry_blobs)
-    from ..decoder.generic import decode_changes_vals
-
-    blobs = stream_blobs(spark, dump_dir)
-    # same manifest auto-enable as replay_generic (ADVICE r5): a stream
-    # whose dump records >32767-row transactions needs the unclamped
-    # DECIMAL order key
-    try:
-        from ..decoder.chunks import read_manifest
-        wide_order = read_manifest(dump_dir).get("max_tx_rows", 0) > 32767
-    except (OSError, ValueError, KeyError):
-        wide_order = False
+    table first seen mid-stream gets its lake table created then), then
+    the same batch body as batch replay (cdc.multi.stage_and_apply): ONE
+    generic decode staged partitioned by (schema, table), then the
+    per-table routed apply — FULL tables take the row-level winner
+    search, tables with MINIMAL partial images the per-column
+    reduction.  The order key follows the manifest, as in stream_apply.
+    Exactly-once is double-keyed per table: streaming checkpoint at the
+    source, batch-id idempotence at each table's snapshot log.  Returns
+    the StreamingQuery."""
+    wide_order = manifest_wide_order(dump_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         registry = scan_table_registry_blobs(batch_df)
         if not registry:
             return
         tables = ensure_tables(lake_root, registry, n_buckets=n_buckets)
-        bid = f"stream-{checkpoint_dir}-{batch_id}"
-        staging = _os.path.join(lake_root, f".stream-batch-{batch_id}")
-        from ..cdc.multi import stage_events
-        events = decode_changes_vals(batch_df)
-        partials = stage_events(events, staging)
-        apply_staged_batch(spark, staging, registry, tables, bid,
-                           broadcast_winners=broadcast_winners,
-                           wide_order=wide_order,
-                           partial_tables=partials)
-        _shutil.rmtree(staging, ignore_errors=True)
+        stage_and_apply(spark, batch_df,
+                        os.path.join(lake_root, f".stream-batch-{batch_id}"),
+                        registry, tables,
+                        f"stream-{checkpoint_dir}-{batch_id}",
+                        broadcast_winners=broadcast_winners,
+                        wide_order=wide_order)
         if on_batch is not None:
             on_batch(batch_id, {t: tbl.current_snapshot_id()
                                 for t, tbl in tables.items()})
 
-    writer = (blobs.writeStream
-              .foreachBatch(apply_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_interval)
-    return writer.start()
+    return _start(spark, dump_dir, checkpoint_dir, apply_batch,
+                  available_now, processing_interval)

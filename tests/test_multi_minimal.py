@@ -119,7 +119,8 @@ def test_empty_staged_batch_commits(spark, dump, tmp_path):
     staging = str(tmp_path / "staging")
     os.makedirs(staging)
     open(os.path.join(staging, "_SUCCESS"), "w").close()
-    apply_staged_batch(spark, staging, reg, tables, "empty-batch")
+    apply_staged_batch(spark, staging, reg, tables, "empty-batch",
+                       partial_tables=set())
     for t in tables.values():
         assert "empty-batch" in t.committed_batch_ids()
 

@@ -42,8 +42,8 @@ def test_threshold_routes_to_distributed(spark, mixed_dump, monkeypatch):
 
 
 def test_stage_events_observes_partial_tables(spark, mixed_dump, tmp_path):
-    """The set returned by stage_events equals the parquet probe that
-    apply_staged_batch falls back to when staged out-of-band."""
+    """The set returned by stage_events equals a scan of the staged
+    parquet's two presence strings."""
     from pyspark.sql import functions as F
     staging = str(tmp_path / "staging")
     events = decode_changes_vals(chunks_df(spark, mixed_dump))

@@ -11,6 +11,7 @@ import pytest
 sys.path.insert(0, "/root/repo")
 
 from binlog_spark.cdc.pipeline import (final_state, reduce_changes,
+                                       scan_extra_columns,
                                        state_fingerprint)
 from binlog_spark.cdc.replay import replay
 from binlog_spark.decoder.chunks import chunks_df
@@ -44,8 +45,10 @@ def test_decoder_carries_extras(spark, evolved_dump):
 
 def test_reduce_promotes_extras_and_matches_oracle(spark, evolved_dump,
                                                    evolved_digest):
-    events = decode_changes(chunks_df(spark, evolved_dump))
-    state = final_state(reduce_changes(events), discover=True)
+    cdf = chunks_df(spark, evolved_dump)
+    extra = scan_extra_columns([tuple(r) for r in cdf.collect()])
+    state = final_state(reduce_changes(decode_changes(cdf)),
+                        extra_names=extra)
     assert "branch" in state.columns
     assert state_fingerprint(state) == evolved_digest
 

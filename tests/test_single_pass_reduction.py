@@ -41,8 +41,7 @@ def test_nokeys_plan_equals_keyed_plan(spark):
     nokeys = _rows_of(reduce_changes(ev))
     keyed = _rows_of(reduce_changes(ev, key_events=keys))
     assert nokeys == keyed
-    # salted and wide-order argmax variants select the same winners
-    assert _rows_of(reduce_changes(ev, salt_buckets=5)) == keyed
+    # the wide-order argmax variant selects the same winners
     assert _rows_of(reduce_changes(ev, wide_order=True)) == keyed
 
 

@@ -2,7 +2,7 @@
 
 The winner search is max(BIGINT) with map-side combine, so a hot key's
 updates collapse to one (key, long) per map task before the shuffle —
-parity must hold with and without the explicit two-stage salting."""
+parity must hold without any salting."""
 
 from __future__ import annotations
 
@@ -38,7 +38,7 @@ def test_fixture_is_actually_skewed(spark, hot_dump):
     assert top["count"] > 500, f"hot key only has {top['count']} events"
 
 
-def test_skewed_parity_default_and_salted(spark, hot_dump):
+def test_skewed_parity(spark, hot_dump):
     want = oracle.state_digest(oracle.final_state(hot_dump))
     cdf = chunks_df(spark, hot_dump)
     ev = decode_changes(cdf)
@@ -46,9 +46,6 @@ def test_skewed_parity_default_and_salted(spark, hot_dump):
     got = state_fingerprint(final_state(
         reduce_changes(ev, key_events=keys), extra_names=[]))
     assert got == want
-    got_salted = state_fingerprint(final_state(
-        reduce_changes(ev, key_events=keys, salt_buckets=16), extra_names=[]))
-    assert got_salted == want
 
 
 def test_shuffle_winner_join_parity(spark, hot_dump):

@@ -49,13 +49,6 @@ def test_reduce_matches_oracle_digest(spark, dump_dir, oracle_digest):
     assert state_fingerprint(state) == oracle_digest
 
 
-def test_salted_reduce_same_digest(spark, dump_dir, oracle_digest):
-    events = decode_changes(chunks_df(spark, dump_dir))
-    state = final_state(reduce_changes(events, salt_buckets=8),
-                        extra_names=[])
-    assert state_fingerprint(state) == oracle_digest
-
-
 def test_full_replay_into_lake(spark, dump_dir, oracle_digest, tmp_path):
     root = str(tmp_path / "lake")
     table = replay(spark, dump_dir, root, chunks_per_batch=None, n_buckets=8)

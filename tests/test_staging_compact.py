@@ -100,6 +100,20 @@ def test_retention_tombstone_ratio(spark, dump_dir, tmp_path):
     assert state_fingerprint(table.read(spark)) == before
 
 
+def test_stored_row_count_fails_loud(tmp_path):
+    """``rows_stored`` is the tombstone-ratio trigger's denominator: a
+    corrupt or missing data file must raise, never count as 0 rows."""
+    import pyarrow as pa
+
+    from binlog_spark.lake.table import _parquet_rows
+    bad = tmp_path / "part-00000.parquet"
+    bad.write_bytes(b"not a parquet file")
+    with pytest.raises(pa.ArrowInvalid):
+        _parquet_rows(str(bad))
+    with pytest.raises(FileNotFoundError):
+        _parquet_rows(str(tmp_path / "gone.parquet"))
+
+
 def test_concurrent_commit_conflict_detected(tmp_path):
     """Optimistic concurrency (the Iceberg commit model): a snapshot
     built on a stale parent must be rejected, not silently clobber the
