@@ -39,7 +39,7 @@ from pyspark.sql.types import (IntegerType, StringType, StructField,
 from ..decoder.chunks import (GENERIC_SPAN_TARGET, chunks_df,
                               decode_parallelism, iter_chunk_bytes,
                               manifest_wide_order, spans_df)
-from ..decoder.generic import decode_changes_vals
+from ..decoder.generic import VALS_SCHEMA, decode_changes_vals
 from ..lake.table import LakeTable
 from .pipeline import pack_ord
 from .replay import _batch_id, batch_plan, plan_batches
@@ -393,6 +393,11 @@ def table_upserts_minimal(staged: DataFrame, columns: list[str],
 #: staged-batch output file size goal (guide §6: 128 MB - 1 GB files)
 STAGE_TARGET_BYTES = 128 << 20
 
+#: one table's staged partition: the decoded rows minus the partition
+#: columns — read with it, the per-table apply runs no schema-inference job
+_STAGED_SCHEMA = StructType([f for f in VALS_SCHEMA.fields
+                             if f.name not in ("table_schema", "table_name")])
+
 
 def stage_events(events: DataFrame, staging: str,
                  est_bytes: int | None = None) -> set:
@@ -493,7 +498,8 @@ def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
         pk = list(t.key_cols)
         upserts = (table_upserts_minimal if (sch, tbl) in partial_tables
                    else table_upserts)
-        up = upserts(spark.read.parquet(part), info["columns"], pk,
+        up = upserts(spark.read.schema(_STAGED_SCHEMA).parquet(part),
+                     info["columns"], pk,
                      info["types"], broadcast_winners=broadcast_winners,
                      wide_order=wide_order)
         t.merge(spark, up, batch_id=bid, offsets=offsets)

@@ -13,8 +13,9 @@ implements the required semantics itself (SURVEY §7 Phase 4):
                                    is a no-op (generalizes the reference's
                                    seek+overwrite resume idempotence,
                                    /root/reference/dump.go:92-99)
-  * schema evolution             — add-column via unionByName(allowMissing),
-                                   recorded per snapshot
+  * schema evolution             — add-column, recorded per snapshot; files
+                                   are read with the snapshot schema, so
+                                   older files read new columns as null
   * time travel                  — read any retained snapshot
   * retention                    — expire_snapshots (role of
                                    /root/reference/local.go:76-93)
@@ -31,13 +32,21 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..cdc.pipeline import DATA_COLS, KEY_COLS
+
+#: commit-order metadata persisted with every row: (column, type, default
+#: for rows that arrive without it)
+_META = (("op", "string", "I"), ("log_file", "string", ""),
+         ("log_pos", "bigint", 0), ("seq_in_tx", "int", 0))
+_META_COLS = tuple(c for c, _, _ in _META)
 
 
 class CommitConflict(Exception):
@@ -201,15 +210,9 @@ class LakeTable:
             ddl = ", ".join(f"`{c}` {types.get(c, 'string')}"
                             for c in schema_cols)
             return spark.createDataFrame([], ddl)
-        # mergeSchema: buckets written before a schema evolution lack the
-        # new columns
-        df = spark.read.option("mergeSchema", "true").parquet(*files)
-        if "op" in df.columns:  # tombstones are persisted, filtered on read
-            df = df.filter(F.col("op") != "D")
-        for c in schema_cols:
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast(types.get(c, "string")))
-        return df.select(*schema_cols)
+        df = _read_lake_files(spark, files, schema_cols, types)
+        # tombstones are persisted, filtered on read
+        return df.filter(F.col("op") != "D").select(*schema_cols)
 
     # -- MERGE --------------------------------------------------------------
 
@@ -240,19 +243,22 @@ class LakeTable:
 
         Copy-on-write at bucket granularity, computed in a SINGLE pass over
         the (expensive) upsert pipeline — no DataFrame cache (its columnar
-        build can cost more than the pipeline itself):
+        build can cost more than the pipeline itself).  The pass carries an
+        ``Observation`` that collects the batch counts and its set of
+        touched buckets:
 
-          * empty table: write live rows straight to final bucket files;
-            touched buckets discovered from the written directories, batch
-            stats collected via ``Observation`` during the same pass.
-          * incremental: stage the full batch (incl. tombstones) to
-            parquet partitioned by bucket — that staging write is the one
-            pipeline execution; discover touched buckets from the staging
-            dirs; then merge = per-key argmax over old ∪ staged rows of
-            the touched buckets, reading cheap parquet instead of
-            recomputing.  At warehouse scale staging the reduced batch
-            before the rewrite is exactly the shuffle-once pattern you
-            want.
+          * empty table: write live rows straight to final bucket files.
+          * incremental: stage the full batch (incl. tombstones) with ONE
+            plain parquet write (``bucket`` is an ordinary column, so the
+            file count follows the batch's own partitions); then merge
+            = per-key argmax over old ∪ staged rows of the touched
+            buckets, both read with the schema the table already knows
+            (no footer-scan job).  The argmax groups by (bucket, key)
+            after one ``repartition`` on bucket, so the rewrite runs ONE
+            Exchange and still writes one file per touched bucket.
+
+        A commit that loses the race to a concurrent writer removes its
+        own data files before it raises ``CommitConflict``.
         """
         from pyspark.sql import Observation
 
@@ -283,162 +289,56 @@ class LakeTable:
         for c in new_cols:
             schema_types.setdefault(c, up_types.get(c, "string"))
 
-        # MINIMAL row images: the reduced batch carries ``present_cols``
-        # (csv of resolved columns, null = fully resolved) and rows are
-        # column PATCHES over the existing key — merge coalesces
-        # unresolved columns from the old row instead of a winner search.
-        # Requires in-log-order batches (replay/tail deliver them so);
-        # identical re-delivery stays idempotent.
-        patch_mode = "present_cols" in upserts.columns
         up = upserts.withColumn("bucket", self._bucket_col())
         # commit-order metadata is persisted with every row: MERGE is itself
         # a last-writer-wins reduction, so batches may arrive out of order
         # (micro-batch file sources don't guarantee log order) and deletes
         # are persisted as tombstones, filtered on read.
-        for c, typ, dflt in (("op", "string", "I"), ("log_file", "string", ""),
-                             ("log_pos", "bigint", 0), ("seq_in_tx", "int", 0)):
+        for c, typ, dflt in _META:
             if c not in up.columns:
                 up = up.withColumn(c, F.lit(dflt).cast(typ))
-        meta_cols = ["op", "log_file", "log_pos", "seq_in_tx"]
+        meta_cols = list(_META_COLS)
         up_cols = [c for c in schema_cols if c in up.columns]
         table_empty = not any(old_buckets.values())
 
         commit_id = uuid.uuid4().hex[:12]
         out_dir = os.path.join(self.data_dir, commit_id)
+        staging_dir = os.path.join(self.data_dir, f".staging-{commit_id}")
         obs = Observation(f"merge-{commit_id}")
-        # one write task per bucket: at n_buckets//2 the write stage ran
-        # half the cluster idle (16 tasks on 32 cores cost 5.7 s wall at
-        # sf0.1); bucket-partitioned files stay one-per-bucket-per-task
-        n_parts = max(self.n_buckets, 1)
-
         extra_sel = [c for c in ("present_cols", *lineage_cols)
                      if c in upserts.columns]
         src = (up.select(*up_cols, *meta_cols, *extra_sel, "bucket")
                .observe(obs, F.count(F.lit(1)).alias("n"),
                         F.sum(F.when(F.col("op") == "D", 1)
-                              .otherwise(0)).alias("d")))
-
-        if table_empty:
-            # patches onto an empty table: unresolved columns are null;
-            # present_cols is merge metadata, never persisted
-            (src.drop(*extra_sel).repartition(n_parts, "bucket")
-             .write.partitionBy("bucket").mode("overwrite").parquet(out_dir))
-            by_bucket = self._bucket_files(out_dir)
-            touched = sorted(by_bucket)
-            staging_dir = None
-        else:
-            staging_dir = os.path.join(self.data_dir,
-                                       f".staging-{commit_id}")
-            (src.repartition(n_parts, "bucket")
-             .write.partitionBy("bucket").mode("overwrite")
-             .parquet(staging_dir))
-            touched = sorted(self._bucket_files(staging_dir))
-            touched_files = [f for b in touched
-                             for f in old_buckets.get(str(b), [])]
-            staged = spark.read.option("basePath", staging_dir) \
-                .option("mergeSchema", "true").parquet(staging_dir)
-            all_cols = list(schema_cols) + meta_cols
-
-            def _conform(df: DataFrame, extra: list[str] = ()) -> DataFrame:
-                for c, typ, dflt in (("op", "string", "I"),
-                                     ("log_file", "string", ""),
-                                     ("log_pos", "bigint", 0),
-                                     ("seq_in_tx", "int", 0)):
-                    if c not in df.columns:
-                        df = df.withColumn(c, F.lit(dflt).cast(typ))
-                for c in schema_cols:
-                    if c not in df.columns:
-                        df = df.withColumn(
-                            c, F.lit(None).cast(schema_types.get(c, "string")))
-                return df.select(*all_cols, *extra)
-
-            staged = _conform(staged, extra_sel)
-            if touched_files and patch_mode:
-                old = _conform(spark.read.option("mergeSchema", "true")
-                               .parquet(*touched_files))
-                keys = list(self.key_cols)
-                non_key = [c for c in all_cols if c not in keys]
-                has_base = all(b in extra_sel for b in lineage_cols)
-                s2 = staged.select(
-                    *keys, F.col("present_cols").alias("_s_present"),
-                    *([F.col(b).alias(f"_s_base_{i}")
-                       for i, b in enumerate(lineage_cols)]
-                      if has_base else []),
-                    *[F.col(c).alias(f"_s_{c}") for c in non_key])
-                # persisted tombstones never donate column values
-                joined = old.join(s2, on=keys, how="full_outer")
-                if has_base:
-                    # key-move lineage: a staged row with base keys is a
-                    # MOVE-IN — unresolved columns inherit from the
-                    # chain-origin row (its bucket is always touched: its
-                    # own tombstone staged there) and NEVER from the old
-                    # row at the same key (the move-in proves that row is
-                    # a dead generation — MySQL requires the key free)
-                    base = old.filter(F.col("op") != "D").select(
-                        *[F.col(k).alias(f"_b_key_{i}")
-                          for i, k in enumerate(keys)],
-                        *[F.col(c).alias(f"_ob_{c}") for c in non_key])
-                    cond = None
-                    for i in range(len(keys)):
-                        eq = F.col(f"_s_base_{i}") == F.col(f"_b_key_{i}")
-                        cond = eq if cond is None else cond & eq
-                    joined = joined.join(base, cond, "left")
-                staged_hit = F.col("_s_op").isNotNull()
-                pres_arr = F.split(F.col("_s_present"), ",")
-
-                def resolve(c: str) -> F.Column:
-                    if c in ("op", *meta_cols):
-                        return F.when(staged_hit, F.col(f"_s_{c}")) \
-                            .otherwise(F.col(c)).alias(c)
-                    has = (F.col("_s_present").isNull()
-                           | F.array_contains(pres_arr, F.lit(c)))
-                    out = F.when(staged_hit & has, F.col(f"_s_{c}"))
-                    if has_base:
-                        out = out.when(staged_hit
-                                       & F.col("_s_base_0").isNotNull(),
-                                       F.col(f"_ob_{c}"))
-                    # unstaged old rows (incl. persisted tombstones, whose
-                    # payload is already null) pass through; a base-less
-                    # patch coalesces from the live old row at the key
-                    return out.otherwise(F.col(c)).alias(c)
-
-                merged = (joined.select(*keys,
-                                        *[resolve(c) for c in non_key])
-                          .withColumn("bucket", self._bucket_col()))
-            elif touched_files:
-                old = _conform(spark.read.option("mergeSchema", "true")
-                               .parquet(*touched_files))
-                # MERGE = per-key last-writer-wins between the existing
-                # rows (which carry their original commit order) and the
-                # batch, in ONE argmax pass: max(struct(_ord, _src, row))
-                # per key, with map-side partial aggregation, so only
-                # winning rows reach the shuffle (no winner join, no
-                # dropDuplicates).  The packed commit order
-                # (cdc.pipeline.pack_ord) leads, so a batch delivered out
-                # of log order still loses to newer rows; ``_src`` (0 old,
-                # 1 staged) breaks order ties in favour of the batch.
-                # Rows merged from non-CDC paths carry default offsets
-                # (log_file "") and pack to 0 (lowest order) rather than
-                # erroring.
-                from ..cdc.pipeline import pack_ord
-                keys = list(self.key_cols)
-                payload = [c for c in all_cols if c not in keys]
-                combined = (old.withColumn("_src", F.lit(0))
-                            .unionByName(staged.withColumn("_src", F.lit(1)))
-                            .withColumn("_ord", pack_ord(strict=False)))
-                win = F.struct("_ord", "_src", *payload)
-                merged = (combined.groupBy(*keys).agg(F.max(win).alias("_w"))
-                          .select(*[F.col(c) if c in keys
-                                    else F.col("_w")[c].alias(c)
-                                    for c in all_cols])
-                          .withColumn("bucket", self._bucket_col()))
+                              .otherwise(0)).alias("d"),
+                        F.collect_set("bucket").alias("buckets")))
+        try:
+            if table_empty:
+                # one write task per bucket: at n_buckets//2 the write
+                # stage ran half the cluster idle (16 tasks on 32 cores
+                # cost 5.7 s wall at sf0.1).  Patches onto an empty table:
+                # unresolved columns are null; present_cols is merge
+                # metadata, never persisted
+                (src.drop(*extra_sel).repartition(max(self.n_buckets, 1),
+                                                  "bucket")
+                 .write.partitionBy("bucket").mode("overwrite")
+                 .parquet(out_dir))
             else:
-                if extra_sel:
-                    staged = staged.drop(*extra_sel)
-                merged = staged.withColumn("bucket", self._bucket_col())
-            (merged.repartition(max(len(touched), 1), "bucket")
-             .write.partitionBy("bucket").mode("overwrite").parquet(out_dir))
+                src.write.mode("overwrite").parquet(staging_dir)
+            metrics = obs.get
+            touched = sorted(metrics["buckets"])
+            if touched and not table_empty:
+                self._rewrite_buckets(
+                    spark, staging_dir, src.schema, out_dir, touched,
+                    [f for b in touched for f in old_buckets.get(str(b), [])],
+                    schema_cols, schema_types)
             by_bucket = self._bucket_files(out_dir)
+        except BaseException:
+            # nothing references this commit's files yet
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
+        finally:
+            shutil.rmtree(staging_dir, ignore_errors=True)
 
         new_buckets = dict(old_buckets)
         written = 0
@@ -459,11 +359,7 @@ class LakeTable:
                                       for f in by_bucket.get(b, []))
         rows_stored = sum(bucket_rows.values())
 
-        row = obs.get
-        n_up, n_del = int(row["n"] or 0), int(row["d"] or 0)
-        if staging_dir:
-            import shutil
-            shutil.rmtree(staging_dir, ignore_errors=True)
+        n_up, n_del = int(metrics["n"] or 0), int(metrics["d"] or 0)
 
         sid = snap["snapshot_id"] + 1
         new_snap = {
@@ -483,8 +379,134 @@ class LakeTable:
                       "data_files_written": written, **(stats or {})},
             "committed_at": time.time(),
         }
-        self._commit_snapshot(new_snap)
+        self._commit_or_discard(new_snap, out_dir)
         return new_snap
+
+    def _rewrite_buckets(self, spark: SparkSession, staging_dir: str,
+                         staged_schema: StructType, out_dir: str,
+                         touched: list[int], touched_files: list[str],
+                         schema_cols: list[str],
+                         schema_types: dict[str, str]) -> None:
+        """Write the new files of the ``touched`` buckets — the staged
+        batch merged with those buckets' current files, one file per
+        bucket.  Both sides are read with known schemas: the staged files
+        with the batch's own, the old files with the table's (batch dtypes
+        first, then the snapshot's ``schema_types``)."""
+        meta_cols = list(_META_COLS)
+        all_cols = list(schema_cols) + meta_cols
+        keys = list(self.key_cols)
+        lineage_cols = tuple(f"base_{k}" for k in keys)
+        extra_sel = [c for c in ("present_cols", *lineage_cols)
+                     if c in staged_schema.names]
+        # MINIMAL row images: the reduced batch carries ``present_cols``
+        # (csv of resolved columns, null = fully resolved) and rows are
+        # column PATCHES over the existing key — merge coalesces
+        # unresolved columns from the old row instead of a winner search.
+        # Requires in-log-order batches (replay/tail deliver them so);
+        # identical re-delivery stays idempotent.
+        patch_mode = "present_cols" in extra_sel
+        types = {**schema_types, **{f.name: f.dataType.simpleString()
+                                    for f in staged_schema.fields}}
+        staged = spark.read.schema(staged_schema).parquet(staging_dir)
+        staged = staged.select(
+            *[F.col(c) if c in staged.columns
+              else F.lit(None).cast(types.get(c, "string")).alias(c)
+              for c in all_cols], *extra_sel, "bucket")
+        n_out = len(touched)
+        if touched_files and patch_mode:
+            old = _read_lake_files(spark, touched_files, schema_cols, types)
+            non_key = [c for c in all_cols if c not in keys]
+            has_base = all(b in extra_sel for b in lineage_cols)
+            s2 = staged.select(
+                *keys, F.col("present_cols").alias("_s_present"),
+                *([F.col(b).alias(f"_s_base_{i}")
+                   for i, b in enumerate(lineage_cols)]
+                  if has_base else []),
+                *[F.col(c).alias(f"_s_{c}") for c in non_key])
+            # persisted tombstones never donate column values
+            joined = old.join(s2, on=keys, how="full_outer")
+            if has_base:
+                # key-move lineage: a staged row with base keys is a
+                # MOVE-IN — unresolved columns inherit from the
+                # chain-origin row (its bucket is always touched: its
+                # own tombstone staged there) and NEVER from the old
+                # row at the same key (the move-in proves that row is
+                # a dead generation — MySQL requires the key free)
+                base = old.filter(F.col("op") != "D").select(
+                    *[F.col(k).alias(f"_b_key_{i}")
+                      for i, k in enumerate(keys)],
+                    *[F.col(c).alias(f"_ob_{c}") for c in non_key])
+                cond = None
+                for i in range(len(keys)):
+                    eq = F.col(f"_s_base_{i}") == F.col(f"_b_key_{i}")
+                    cond = eq if cond is None else cond & eq
+                joined = joined.join(base, cond, "left")
+            staged_hit = F.col("_s_op").isNotNull()
+            pres_arr = F.split(F.col("_s_present"), ",")
+
+            def resolve(c: str) -> F.Column:
+                if c in ("op", *meta_cols):
+                    return F.when(staged_hit, F.col(f"_s_{c}")) \
+                        .otherwise(F.col(c)).alias(c)
+                has = (F.col("_s_present").isNull()
+                       | F.array_contains(pres_arr, F.lit(c)))
+                out = F.when(staged_hit & has, F.col(f"_s_{c}"))
+                if has_base:
+                    out = out.when(staged_hit
+                                   & F.col("_s_base_0").isNotNull(),
+                                   F.col(f"_ob_{c}"))
+                # unstaged old rows (incl. persisted tombstones, whose
+                # payload is already null) pass through; a base-less
+                # patch coalesces from the live old row at the key
+                return out.otherwise(F.col(c)).alias(c)
+
+            merged = (joined.select(*keys, *[resolve(c) for c in non_key])
+                      .withColumn("bucket", self._bucket_col())
+                      .repartition(n_out, "bucket"))
+        elif touched_files:
+            old = _read_lake_files(spark, touched_files, schema_cols, types)
+            # MERGE = per-key last-writer-wins between the existing rows
+            # (which carry their original commit order) and the batch, in
+            # ONE argmax pass: max(struct(_ord, _src, row)) per key (no
+            # winner join, no dropDuplicates).  The packed commit order
+            # (cdc.pipeline.pack_ord) leads, so a batch delivered out of
+            # log order still loses to newer rows; ``_src`` (0 old, 1
+            # staged) breaks order ties in favour of the batch.  Rows
+            # merged from non-CDC paths carry default offsets (log_file
+            # "") and pack to 0 (lowest order) rather than erroring.
+            # Grouping by (bucket, key) after the repartition on bucket
+            # needs no second Exchange: hash partitioning on bucket
+            # already clusters every (bucket, key) group, and it is the
+            # layout the bucket write wants.
+            from ..cdc.pipeline import pack_ord
+            payload = [c for c in all_cols if c not in keys]
+            combined = (old.withColumn("bucket", self._bucket_col())
+                        .withColumn("_src", F.lit(0))
+                        .unionByName(staged.select(*all_cols, "bucket")
+                                     .withColumn("_src", F.lit(1)))
+                        .withColumn("_ord", pack_ord(strict=False)))
+            win = F.struct("_ord", "_src", *payload)
+            merged = (combined.repartition(n_out, "bucket")
+                      .groupBy("bucket", *keys).agg(F.max(win).alias("_w"))
+                      .select(*[F.col(c) if c in keys
+                                else F.col("_w")[c].alias(c)
+                                for c in all_cols], "bucket"))
+        else:
+            merged = staged.drop(*extra_sel).repartition(n_out, "bucket")
+        merged.write.partitionBy("bucket").mode("overwrite").parquet(out_dir)
+
+    def _commit_or_discard(self, snap: dict, out_dir: str) -> None:
+        """Commit ``snap``; if a concurrent writer won the race, remove
+        this commit's data directory (no snapshot can reference it, and
+        ``expire_snapshots`` only collects referenced files) and re-raise.
+        ``_commit_snapshot`` raises ``CommitConflict`` only before it
+        claims the snapshot id, so a committed directory is never
+        removed."""
+        try:
+            self._commit_snapshot(snap)
+        except CommitConflict:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
 
     def tombstone_stats(self) -> dict:
         """Cumulative tombstones persisted since the last compact — the
@@ -550,19 +572,20 @@ class LakeTable:
         schema_types = dict(snap.get("schema_types") or {})
         commit_id = uuid.uuid4().hex[:12]
         out_dir = os.path.join(self.data_dir, commit_id)
-        if files:
-            df = spark.read.option("mergeSchema", "true").parquet(*files)
-            if drop_tombstones and "op" in df.columns:
-                df = df.filter(F.col("op") != "D")
-            for c in schema_cols:
-                if c not in df.columns:
-                    df = df.withColumn(
-                        c, F.lit(None).cast(schema_types.get(c, "string")))
-            df = df.withColumn("bucket", self._bucket_col())
-            (df.repartition(target_buckets or max(self.n_buckets // 2, 1),
-                            "bucket")
-             .write.partitionBy("bucket").mode("overwrite").parquet(out_dir))
-        by_bucket = self._bucket_files(out_dir)
+        try:
+            if files:
+                df = _read_lake_files(spark, files, schema_cols, schema_types)
+                if drop_tombstones:
+                    df = df.filter(F.col("op") != "D")
+                df = df.withColumn("bucket", self._bucket_col())
+                (df.repartition(target_buckets
+                                or max(self.n_buckets // 2, 1), "bucket")
+                 .write.partitionBy("bucket").mode("overwrite")
+                 .parquet(out_dir))
+            by_bucket = self._bucket_files(out_dir)
+        except BaseException:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
         bucket_rows = {str(b): sum(_parquet_rows(f) for f in fl)
                        for b, fl in by_bucket.items()}
         new_snap = {
@@ -581,7 +604,7 @@ class LakeTable:
                       "data_files_written": sum(map(len, by_bucket.values()))},
             "committed_at": time.time(),
         }
-        self._commit_snapshot(new_snap)
+        self._commit_or_discard(new_snap, out_dir)
         return new_snap
 
     # -- retention ----------------------------------------------------------
@@ -618,6 +641,27 @@ class LakeTable:
                 if not os.listdir(full):
                     os.rmdir(full)
         return removed
+
+
+def _read_lake_files(spark: SparkSession, files: list[str],
+                     schema_cols: list[str],
+                     types: dict[str, str]) -> DataFrame:
+    """Read lake data files with the snapshot schema (``schema_cols``
+    typed by ``types``, string by default, plus the meta columns) — an
+    explicit schema launches no footer-scan job, where a ``mergeSchema``
+    read launches one per call.  A column a file predates (schema
+    evolution) reads as null; a meta column it predates takes the default
+    ``merge`` stamps on rows that arrive without one (a null ``op`` would
+    drop the row on read)."""
+    meta = {c: (typ, dflt) for c, typ, dflt in _META
+            if c not in schema_cols}
+    cols = [(c, types.get(c, "string")) for c in schema_cols] \
+        + [(c, typ) for c, (typ, _) in meta.items()]
+    df = spark.read.schema(", ".join(f"`{c}` {typ}" for c, typ in cols)) \
+        .parquet(*files)
+    return df.select(
+        *[F.coalesce(F.col(c), F.lit(meta[c][1]).cast(typ)).alias(c)
+          if c in meta else F.col(c) for c, typ in cols])
 
 
 def _parquet_rows(path: str) -> int:

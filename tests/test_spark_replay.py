@@ -141,6 +141,107 @@ def test_merge_out_of_order_batches(spark, tmp_path):
     assert state_fingerprint(table.read(spark)) == want
 
 
+_MERGE_COLS = ("repo string, path string, commit string, lang string, "
+               "content string, op string, log_file string, log_pos bigint, "
+               "seq_in_tx int")
+
+
+def _merge_batch(spark, rows):
+    """A reduced batch shaped like ``reduce_changes`` output: one row per
+    key, produced by an aggregation (so its plan ends in a shuffle)."""
+    df = spark.createDataFrame(rows, _MERGE_COLS)
+    return df.groupBy("repo", "path").agg(
+        *[F.max(c).alias(c) for c in ("commit", "lang", "content", "op",
+                                      "log_file", "log_pos", "seq_in_tx")])
+
+
+def _bucket_of(spark, keys, n_buckets):
+    df = spark.createDataFrame(keys, "repo string, path string")
+    return {(r.repo, r.path): r.b for r in df.select(
+        "repo", "path",
+        F.pmod(F.xxhash64("repo", "path"), F.lit(n_buckets)).alias("b"))
+        .collect()}
+
+
+def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
+    """Copy-on-write at bucket granularity: a second FULL merge rewrites
+    exactly the buckets its keys hash to (one file each); every other
+    bucket keeps its exact file paths.  An empty batch commits without
+    rewriting any bucket, and no staging directory outlives a merge."""
+    import os
+    n_buckets = 8
+    keys = [("r", f"p{i}") for i in range(200)]
+    fresh = [("r", f"new{i}") for i in range(60)]
+    bucket = _bucket_of(spark, keys + fresh, n_buckets)
+    table = LakeTable(str(tmp_path / "lake_cow"), n_buckets=n_buckets)
+    table.create()
+    table.merge(spark, _merge_batch(spark, [
+        (*k, "c0", "py", "v0", "I", "bin.000001", 100 + i, 0)
+        for i, k in enumerate(keys)]), batch_id="b0")
+    first = table.snapshot()
+    assert sorted(map(int, first["buckets"])) == list(range(n_buckets))
+
+    hit = {1, 4, 6}
+    upd = [k for k in keys if bucket[k] in hit][:12]
+    gone = [k for k in keys if bucket[k] in hit][12:15]
+    new = [k for k in fresh if bucket[k] in hit][:3]
+    rows = ([(*k, "c1", "py", "v1", "U", "bin.000002", 100 + i, 0)
+             for i, k in enumerate(upd)]
+            + [(*k, None, None, None, "D", "bin.000002", 500 + i, 0)
+               for i, k in enumerate(gone)]
+            + [(*k, "c1", "py", "v1", "I", "bin.000002", 900 + i, 0)
+               for i, k in enumerate(new)])
+    assert {bucket[k] for k in upd + gone + new} == hit
+    second = table.merge(spark, _merge_batch(spark, rows), batch_id="b1")
+    st = second["stats"]
+    assert st["touched_buckets"] == st["data_files_written"] == len(hit)
+    assert (st["upserts"], st["deletes"]) == (len(rows), len(gone))
+    for b, files in first["buckets"].items():
+        if int(b) in hit:
+            assert len(second["buckets"][b]) == 1
+            assert not set(second["buckets"][b]) & set(files)
+        else:
+            assert second["buckets"][b] == files
+    got = {(r.repo, r.path): r.commit for r in table.read(spark).collect()}
+    want = {k: "c0" for k in keys if k not in gone}
+    want.update({k: "c1" for k in upd + new})
+    assert got == want
+
+    n_dirs = len(os.listdir(table.data_dir))
+    third = table.merge(spark, _merge_batch(spark, []), batch_id="b2")
+    assert third["buckets"] == second["buckets"]
+    assert (third["stats"]["touched_buckets"],
+            third["stats"]["data_files_written"]) == (0, 0)
+    assert len(os.listdir(table.data_dir)) == n_dirs
+    assert not [d for d in os.listdir(table.data_dir)
+                if d.startswith(".staging-")]
+
+
+def test_incremental_merge_runs_four_jobs(spark, tmp_path):
+    """An incremental FULL merge of a reduced batch runs 4 Spark jobs:
+    the staging write (the batch's shuffle + the write) and the bucket
+    rewrite (one Exchange + the write).  A footer-scan read or a second
+    Exchange would add a job."""
+    table = LakeTable(str(tmp_path / "lake_jobs"), n_buckets=8)
+    table.create()
+    table.merge(spark, _merge_batch(spark, [
+        ("r", f"p{i}", "c0", "py", "v0", "I", "bin.000001", 100 + i, 0)
+        for i in range(200)]), batch_id="b0")
+    batch = _merge_batch(spark, [
+        ("r", f"p{i}", "c1", "py", "v1", "U", "bin.000002", 100 + i, 0)
+        for i in range(0, 200, 7)])
+    sc = spark.sparkContext
+    group = f"merge-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "incremental merge")
+    try:
+        snap = table.merge(spark, batch, batch_id="b1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert snap["stats"]["touched_buckets"] > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+
+
 def test_time_travel(spark, dump_dir, tmp_path):
     root = str(tmp_path / "lake_tt")
     table = replay(spark, dump_dir, root, chunks_per_batch=40, n_buckets=8)

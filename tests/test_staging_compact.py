@@ -186,3 +186,46 @@ def test_commit_race_parallel_writers(tmp_path):
         th.join()
     assert len(results) == 1
     assert t.snapshot()["batch_id"] == results[0]
+
+
+def test_lost_merge_race_leaves_no_orphan_data(spark, tmp_path):
+    """A MERGE whose commit loses to a concurrent writer must not leave
+    its data files behind: no snapshot references them, so
+    ``expire_snapshots`` would never collect them.  The winner's snapshot
+    stays intact."""
+    import os
+
+    from binlog_spark.lake.table import CommitConflict, LakeTable
+    cols = "repo string, path string, commit string, lang string, " \
+        "content string"
+
+    def batch(tag: str):
+        return spark.createDataFrame(
+            [("r", f"p{i}", tag, "py", tag) for i in range(40)], cols)
+
+    root = str(tmp_path / "orphan")
+    loser = LakeTable(root, n_buckets=4)
+    loser.create()
+    loser.merge(spark, batch("seed"), batch_id="seed")
+    winner = LakeTable(root, n_buckets=4)
+    commit = LakeTable._commit_snapshot
+
+    def race(snap: dict) -> None:
+        # the other writer commits after the loser wrote its bucket
+        # files, before the loser claims its snapshot id
+        winner.merge(spark, batch("won"), batch_id="won")
+        commit(loser, snap)
+
+    loser._commit_snapshot = race
+    with pytest.raises(CommitConflict):
+        loser.merge(spark, batch("lost"), batch_id="lost")
+
+    snap = winner.snapshot()
+    assert snap["batch_id"] == "won"
+    got = winner.read(spark).groupBy("commit").count().collect()
+    assert [tuple(r) for r in got] == [("won", 40)]
+    data_dir = os.path.join(root, "data")
+    referenced = {os.path.relpath(f, data_dir).split(os.sep)[0]
+                  for s in winner.snapshots()
+                  for fl in s["buckets"].values() for f in fl}
+    assert set(os.listdir(data_dir)) == referenced
