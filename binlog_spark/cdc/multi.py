@@ -10,10 +10,11 @@ parses the same TLV stream).
 
 Scale shape:
 
-  * table discovery is a distributed frame scan over chunk spans that
-    emits only TABLE_MAP descriptors (bytes scanned ≫ rows emitted —
-    no row decode, no shuffle; a driver-side scan would serialize the
-    whole dump through one core)
+  * table discovery is a frame scan over chunk spans that emits only
+    TABLE_MAP descriptors (bytes scanned ≫ rows emitted — no row decode,
+    no shuffle): a header hop on the driver up to
+    REGISTRY_DRIVER_MAX_BYTES of input, a distributed scan above it (a
+    driver-side scan would serialize a large dump through one core)
   * each batch decodes ONCE (generic decoder) and is staged to parquet
     partitioned by (table_schema, table_name); per-table reductions then
     read their own partition directories — the decode is never re-run
@@ -90,8 +91,8 @@ def _registry_batch(rows):
 
 
 def _scan(batches):
-    """mapInArrow worker: chunk spans, or a streaming micro-batch's raw
-    blobs → one row per distinct TABLE_MAP."""
+    """mapInArrow worker: chunk spans, or raw file blobs → one row per
+    distinct TABLE_MAP."""
     rows = _registry_rows((data, off == 0)
                           for _f, off, data in iter_chunk_bytes(batches))
     if rows:
@@ -156,9 +157,9 @@ def scan_table_registry_spans(spark: SparkSession, spans: list) -> dict:
 
 
 def scan_table_registry_blobs(blobs: DataFrame) -> dict:
-    """Registry discovery over a STREAMING micro-batch of raw file blobs
-    (columns log_file, chunk_off, data): a small distributed frame scan —
-    rows are length-skipped, only TABLE_MAPs parse."""
+    """Registry discovery over a frame of raw file blobs (columns
+    log_file, chunk_off, data): a small distributed frame scan — rows
+    are length-skipped, only TABLE_MAPs parse."""
     return _fold_registry(
         blobs.select("log_file", "chunk_off", "data")
         .mapInArrow(_scan, _REGISTRY_SCHEMA).collect())
@@ -493,7 +494,7 @@ def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
             t.merge(spark, spark.range(0).selectExpr(
                 *[f"cast(null as {types.get(c, 'string')}) as `{c}`"
                   for c in t.key_cols]).filter("false"),
-                batch_id=bid)
+                batch_id=bid, offsets=offsets)
             return
         pk = list(t.key_cols)
         upserts = (table_upserts_minimal if (sch, tbl) in partial_tables
@@ -519,23 +520,24 @@ def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
             apply_table(item)
 
 
-def stage_and_apply(spark: SparkSession, chunks: DataFrame, staging: str,
+def stage_and_apply(spark: SparkSession, spans: list[tuple], staging: str,
                     registry: dict, tables: dict, bid: str, *,
-                    partitions: int | None = None,
-                    est_bytes: int | None = None,
-                    offsets: dict | None = None,
-                    broadcast_winners: bool,
+                    broadcast_winners: bool | None,
                     wide_order: bool) -> None:
-    """One multi-table batch — the body batch replay and the streaming
-    tail share: ONE generic decode of ``chunks`` (span or blob rows),
-    staged partitioned by table so every per-table reduction reads only
-    its own partition dirs, then the per-table apply; the staging dir is
+    """One multi-table batch of chunk spans — the body batch replay and
+    the streaming tail share: ONE generic decode, sized and planned by
+    cdc.replay.batch_plan, staged partitioned by table so every
+    per-table reduction reads only its own partition dirs, then the
+    per-table apply committing the batch's offsets; the staging dir is
     removed afterwards."""
-    events = decode_changes_vals(chunks, partitions=partitions)
-    partials = stage_events(events, staging, est_bytes=est_bytes)
+    bw, parts, offsets = batch_plan(spark, spans, GENERIC_SPAN_TARGET,
+                                    broadcast_winners)
+    events = decode_changes_vals(spans_df(spark, spans), partitions=parts)
+    partials = stage_events(events, staging,
+                            est_bytes=sum(int(s[3]) for s in spans))
     apply_staged_batch(spark, staging, registry, tables, bid,
                        offsets=offsets,
-                       broadcast_winners=broadcast_winners,
+                       broadcast_winners=bw,
                        wide_order=wide_order,
                        partial_tables=partials)
     shutil.rmtree(staging, ignore_errors=True)
@@ -570,12 +572,9 @@ def replay_generic(spark: SparkSession, dump_dir: str, lake_root: str, *,
         bid = _batch_id(dump_dir, i, [s[1:] for s in spans])
         if all(bid in t.committed_batch_ids() for t in tables.values()):
             continue
-        bw, parts, offsets = batch_plan(spark, spans, GENERIC_SPAN_TARGET,
-                                        broadcast_winners)
-        stage_and_apply(spark, spans_df(spark, spans),
+        stage_and_apply(spark, spans,
                         os.path.join(lake_root, f".batch-{bid}"),
-                        registry, tables, bid, partitions=parts,
-                        est_bytes=sum(int(s[3]) for s in spans),
-                        offsets=offsets, broadcast_winners=bw,
+                        registry, tables, bid,
+                        broadcast_winners=broadcast_winners,
                         wide_order=wide_order)
     return tables

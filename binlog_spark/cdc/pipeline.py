@@ -727,8 +727,8 @@ def flatten_extras(upserts: DataFrame,
     columns.
 
     ``names`` come from a TABLE_MAP scan — ``scan_extra_columns`` on the
-    driver (milliseconds) or ``scan_extra_columns_blobs`` for streaming
-    micro-batches — never from executing the upsert pipeline."""
+    driver (milliseconds) or ``registry_extra_columns`` of a batch's
+    registry — never from executing the upsert pipeline."""
     if "extra_json" not in upserts.columns:
         return upserts, []
     for n in names:
@@ -766,21 +766,25 @@ def scan_extra_columns(spans: list[tuple]) -> list[str]:
     return []
 
 
-def scan_extra_columns_blobs(blobs: DataFrame) -> list[str]:
-    """Schema discovery for a STREAMING micro-batch of raw blobs: the
-    widest table of the batch's TABLE_MAP registry
-    (cdc.multi.scan_table_registry_blobs — a small distributed frame
-    scan) minus the base and unnamed columns, instead of executing the
-    decode→reduce pipeline for a distinct-key probe (column additions
-    are monotonic, so the widest TABLE_MAP is the newest)."""
-    from .multi import scan_table_registry_blobs
-    registry = scan_table_registry_blobs(blobs)
+def registry_extra_columns(registry: dict) -> list[str]:
+    """Schema-evolution extras of a TABLE_MAP registry
+    (cdc.multi.scan_table_registry_spans or _blobs): the widest table's
+    columns minus the base and unnamed ones — column additions are
+    monotonic, so the widest TABLE_MAP is the newest."""
     if not registry:
         return []
     names = max((t["columns"] for t in registry.values()), key=len)
     # the registry names an unnamed column by its ordinal, "@i"
     return sorted({n for i, n in enumerate(names)
                    if n != f"@{i}" and n not in BASE_COLS})
+
+
+def scan_extra_columns_blobs(blobs: DataFrame) -> list[str]:
+    """Schema discovery for a frame of raw file blobs (columns log_file,
+    chunk_off, data): registry_extra_columns of a small distributed
+    frame scan (cdc.multi.scan_table_registry_blobs)."""
+    from .multi import scan_table_registry_blobs
+    return registry_extra_columns(scan_table_registry_blobs(blobs))
 
 
 def final_state(upserts: DataFrame,

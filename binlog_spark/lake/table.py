@@ -257,6 +257,10 @@ class LakeTable:
             after one ``repartition`` on bucket, so the rewrite runs ONE
             Exchange and still writes one file per touched bucket.
 
+        Both bucket writes run ``_write_tasks`` tasks: hash partitioning
+        on ``bucket`` puts each bucket in exactly one task, so a task
+        holding several buckets still writes one file per bucket.
+
         A commit that loses the race to a concurrent writer removes its
         own data files before it raises ``CommitConflict``.
         """
@@ -303,7 +307,9 @@ class LakeTable:
 
         commit_id = uuid.uuid4().hex[:12]
         out_dir = os.path.join(self.data_dir, commit_id)
-        staging_dir = os.path.join(self.data_dir, f".staging-{commit_id}")
+        # not dot-prefixed: Spark treats such a path as hidden and warns
+        # that all its paths were ignored on every read of it
+        staging_dir = os.path.join(self.data_dir, f"staging-{commit_id}")
         obs = Observation(f"merge-{commit_id}")
         extra_sel = [c for c in ("present_cols", *lineage_cols)
                      if c in upserts.columns]
@@ -314,13 +320,10 @@ class LakeTable:
                         F.collect_set("bucket").alias("buckets")))
         try:
             if table_empty:
-                # one write task per bucket: at n_buckets//2 the write
-                # stage ran half the cluster idle (16 tasks on 32 cores
-                # cost 5.7 s wall at sf0.1).  Patches onto an empty table:
-                # unresolved columns are null; present_cols is merge
-                # metadata, never persisted
-                (src.drop(*extra_sel).repartition(max(self.n_buckets, 1),
-                                                  "bucket")
+                # patches onto an empty table: unresolved columns are
+                # null; present_cols is merge metadata, never persisted
+                (src.drop(*extra_sel)
+                 .repartition(_write_tasks(spark, self.n_buckets), "bucket")
                  .write.partitionBy("bucket").mode("overwrite")
                  .parquet(out_dir))
             else:
@@ -333,6 +336,10 @@ class LakeTable:
                     [f for b in touched for f in old_buckets.get(str(b), [])],
                     schema_cols, schema_types)
             by_bucket = self._bucket_files(out_dir)
+            if not by_bucket:
+                # an empty batch onto an empty table: a commit dir no
+                # snapshot names would never be collected
+                shutil.rmtree(out_dir, ignore_errors=True)
         except BaseException:
             # nothing references this commit's files yet
             shutil.rmtree(out_dir, ignore_errors=True)
@@ -412,7 +419,7 @@ class LakeTable:
             *[F.col(c) if c in staged.columns
               else F.lit(None).cast(types.get(c, "string")).alias(c)
               for c in all_cols], *extra_sel, "bucket")
-        n_out = len(touched)
+        n_out = _write_tasks(spark, len(touched))
         if touched_files and patch_mode:
             old = _read_lake_files(spark, touched_files, schema_cols, types)
             non_key = [c for c in all_cols if c not in keys]
@@ -611,36 +618,55 @@ class LakeTable:
 
     def expire_snapshots(self, keep_last: int = 2) -> list[str]:
         """Drop old snapshots and GC data files no retained snapshot
-        references (role of RemoveFirstFile, /root/reference/local.go:76-93)."""
+        references (role of RemoveFirstFile in the reference's local.go:76-93).
+
+        A dropped snapshot's commit directory (``data/<commit>``, the
+        parent of its ``bucket=`` dirs) goes with it once no retained
+        snapshot references a file under it.  Directories no snapshot
+        names — a live writer's output or staging dir — are left alone."""
         snaps = self.snapshots()
         if len(snaps) <= keep_last:
             return []
         drop, keep = snaps[:-keep_last], snaps[-keep_last:]
         live = {f for s in keep for fl in s["buckets"].values() for f in fl}
+        live_commits = {_commit_dir(f) for f in live}
         removed = []
+        dropped_commits = set()
         for s in drop:
             for fl in s["buckets"].values():
                 for f in fl:
+                    dropped_commits.add(_commit_dir(f))
                     if f not in live and os.path.exists(f):
                         os.remove(f)
                         removed.append(f)
             os.remove(os.path.join(self.snap_dir, f"v{s['snapshot_id']}.json"))
-        # prune now-empty bucket dirs, then now-empty commit dirs
-        if os.path.isdir(self.data_dir):
-            for d in os.listdir(self.data_dir):
-                full = os.path.join(self.data_dir, d)
-                if not os.path.isdir(full):
-                    continue
-                for sub in os.listdir(full):
-                    subf = os.path.join(full, sub)
-                    if os.path.isdir(subf) and not any(
-                            n.endswith(".parquet") for n in os.listdir(subf)):
-                        for n in os.listdir(subf):  # stray _SUCCESS/.crc files
-                            os.remove(os.path.join(subf, n))
-                        os.rmdir(subf)
-                if not os.listdir(full):
-                    os.rmdir(full)
+        for d in sorted(dropped_commits - live_commits):
+            # the rest is Spark's commit markers (_SUCCESS and .crc files)
+            shutil.rmtree(d, ignore_errors=True)
+        # a commit dir that still holds live files: prune its bucket dirs
+        # whose files all expired
+        for d in sorted(dropped_commits & live_commits):
+            for sub in os.listdir(d):
+                subf = os.path.join(d, sub)
+                if sub.startswith("bucket=") and os.path.isdir(subf) \
+                        and not any(n.endswith(".parquet")
+                                    for n in os.listdir(subf)):
+                    shutil.rmtree(subf, ignore_errors=True)
         return removed
+
+
+def _commit_dir(data_file: str) -> str:
+    """``data/<commit>`` of a lake data file ``data/<commit>/bucket=<k>/f``."""
+    return os.path.dirname(os.path.dirname(data_file))
+
+
+def _write_tasks(spark: SparkSession, n_buckets: int) -> int:
+    """Task count of a bucket write: one per bucket up to the cluster's
+    parallelism.  ``repartition(n, "bucket")`` over n bucket ids does not
+    give each bucket its own task anyway (hashing leaves some tasks empty
+    and others with several buckets); tasks beyond the cores only add
+    task and committer overhead."""
+    return max(1, min(n_buckets, spark.sparkContext.defaultParallelism))
 
 
 def _read_lake_files(spark: SparkSession, files: list[str],

@@ -2,16 +2,24 @@
 
 The streaming counterpart of the reference's dir tail
 (/root/reference/dir_reader.go:54-107 sleep-polls 1 s for the `.next`
-file); here the Spark file source polls the directory and each completed
-binlog file becomes a micro-batch input row.  File-source contract: files
-must appear atomically (write temp + rename — the reference's dump sink
-gets the same effect from seek+overwrite-at-offset, dump.go:92-99); a
-file is decoded once, partial trailing bytes of a still-growing file
-would be silently lost, so only rotated-away files should be visible.
+file, then opens the next file by name and position); here the Spark
+file source polls the directory and each micro-batch is a list of
+whole-file chunk spans ``(dump_dir, log_file, 0, length)`` — the same
+span rows batch replay decodes.  The source lists names and lengths
+only, so no file bytes pass through the streaming plan: the decode
+tasks read their own files as replay's do, and the batch's TABLE_MAP
+registry is header-hopped on the driver up to
+cdc.multi.REGISTRY_DRIVER_MAX_BYTES (a distributed span scan above).
+File-source contract: files must appear atomically (write temp + rename
+— the reference's dump sink gets the same effect from
+seek+overwrite-at-offset, dump.go:92-99); a file is decoded once,
+partial trailing bytes of a still-growing file would be silently lost,
+so only rotated-away files should be visible.
 
 Exactly-once is double-keyed: Spark's streaming checkpoint dedups batch
 replays at the source, and the lake's batch-id idempotence dedups them at
-the sink — either alone survives a crash between the two.
+the sink — either alone survives a crash between the two.  Each commit
+records the batch's offsets (its newest file and that file's length).
 """
 
 from __future__ import annotations
@@ -22,12 +30,12 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cdc.multi import (ensure_tables, scan_table_registry_blobs,
+from ..cdc.multi import (ensure_tables, scan_table_registry_spans,
                          stage_and_apply)
 from ..cdc.pipeline import (flatten_extras, reduce_changes,
-                            reduce_changes_minimal,
-                            scan_extra_columns_blobs)
-from ..decoder.chunks import manifest_wide_order
+                            reduce_changes_minimal, registry_extra_columns)
+from ..cdc.replay import batch_plan
+from ..decoder.chunks import DECODE_SPAN_TARGET, manifest_wide_order, spans_df
 from ..decoder.kernel import decode_changes, decode_keys
 from ..lake.table import LakeTable
 
@@ -37,7 +45,9 @@ _BINARY_FILE_SCHEMA = ("path string, modificationTime timestamp, "
 
 def stream_blobs(spark: SparkSession, dump_dir: str,
                  max_files_per_trigger: int = 16) -> DataFrame:
-    """Streaming DataFrame of raw binlog file blobs from a staging dir."""
+    """Streaming DataFrame of a staging dir's binlog files as whole-file
+    chunk spans (decoder.chunks.CHUNK_SCHEMA columns).  ``content`` is
+    never selected, so the binaryFile source reads no file bytes."""
     raw = (spark.readStream.format("binaryFile")
            .schema(_BINARY_FILE_SCHEMA)
            .option("pathGlobFilter", "binlog.*")
@@ -48,17 +58,25 @@ def stream_blobs(spark: SparkSession, dump_dir: str,
            # rejects their names)
            .filter(~F.col("path").endswith(".next")))
     return raw.select(
+        F.lit(dump_dir).alias("dump_dir"),
         F.element_at(F.split("path", "/"), -1).alias("log_file"),
         F.lit(0).cast("long").alias("chunk_off"),
-        F.col("content").alias("data"))
+        F.col("length").alias("chunk_len"))
 
 
 def _start(spark: SparkSession, dump_dir: str, checkpoint_dir: str,
-           apply_batch: Callable[[DataFrame, int], None],
+           apply_spans: Callable[[list, int], None],
            available_now: bool, processing_interval: str):
-    """Run ``apply_batch`` on every micro-batch of the dir's blobs:
-    drain what is visible and stop, or keep tailing on a processing-time
-    trigger.  Returns the StreamingQuery."""
+    """Run ``apply_spans`` on every non-empty micro-batch's span list, in
+    file order: drain what is visible and stop, or keep tailing on a
+    processing-time trigger.  A micro-batch that lists only `.next`
+    pointer files has no spans: it commits nothing to the lake.  Returns
+    the StreamingQuery."""
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spans = sorted(tuple(r) for r in batch_df.collect())
+        if spans:
+            apply_spans(spans, batch_id)
+
     trigger = ({"availableNow": True} if available_now
                else {"processingTime": processing_interval})
     return (stream_blobs(spark, dump_dir).writeStream
@@ -84,7 +102,7 @@ def stream_apply(spark: SparkSession, dump_dir: str, table_root: str,
     ``minimal_images``: the source logs binlog_row_image=MINIMAL —
     partial images patch per column (reduce_changes_minimal + the
     patch-aware MERGE).  ``broadcast_winners`` only affects that MINIMAL
-    branch: a FULL-image micro-batch decodes its blobs once and picks
+    branch: a FULL-image micro-batch decodes its spans once and picks
     each key's winner in one ``max(struct(_ord, row))`` pass
     (cdc.pipeline.last_writer_wins without a key probe).  The order key
     is the one batch replay uses: wide when the dump's manifest records
@@ -95,18 +113,22 @@ def stream_apply(spark: SparkSession, dump_dir: str, table_root: str,
     table.create()
     wide_order = manifest_wide_order(dump_dir)
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the micro-batch is raw blobs: decode inside the batch
-        events = decode_changes(batch_df)
-        # schema discovery via a cheap distributed TABLE_MAP scan of the
-        # batch's blobs — a name-less flatten_extras would EXECUTE the
-        # upsert pipeline once per micro-batch for a distinct-key probe
-        extra_names = scan_extra_columns_blobs(batch_df)
+    def apply_spans(spans: list, batch_id: int) -> None:
+        bw, parts, offsets = batch_plan(spark, spans, DECODE_SPAN_TARGET,
+                                        broadcast_winners)
+        cdf = spans_df(spark, spans)
+        events = decode_changes(cdf, partitions=parts)
+        # schema discovery from the batch's TABLE_MAPs (a driver header
+        # hop at micro-batch sizes) — a name-less flatten_extras would
+        # EXECUTE the upsert pipeline once per micro-batch for a
+        # distinct-key probe
+        extra_names = registry_extra_columns(
+            scan_table_registry_spans(spark, spans))
         if minimal_images:
             upserts = reduce_changes_minimal(
-                events, extra_names=extra_names,
-                broadcast_winners=broadcast_winners,
-                key_events=decode_keys(batch_df), wide_order=wide_order)
+                events, extra_names=extra_names, broadcast_winners=bw,
+                key_events=decode_keys(cdf, partitions=parts),
+                wide_order=wide_order)
         else:
             # micro-batches are a few MB: the keyed plan's extra key-only
             # decode, winner checkpoint and join-back cost more than the
@@ -114,11 +136,12 @@ def stream_apply(spark: SparkSession, dump_dir: str, table_root: str,
             upserts = reduce_changes(events, wide_order=wide_order)
             upserts, _ = flatten_extras(upserts, names=extra_names)
         snap = table.merge(spark, upserts,
-                           batch_id=f"stream-{checkpoint_dir}-{batch_id}")
+                           batch_id=f"stream-{checkpoint_dir}-{batch_id}",
+                           offsets=offsets)
         if on_batch is not None:
             on_batch(batch_id, snap)
 
-    return _start(spark, dump_dir, checkpoint_dir, apply_batch,
+    return _start(spark, dump_dir, checkpoint_dir, apply_spans,
                   available_now, processing_interval)
 
 
@@ -146,12 +169,12 @@ def stream_apply_multi(spark: SparkSession, dump_dir: str, lake_root: str,
     the StreamingQuery."""
     wide_order = manifest_wide_order(dump_dir)
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        registry = scan_table_registry_blobs(batch_df)
+    def apply_spans(spans: list, batch_id: int) -> None:
+        registry = scan_table_registry_spans(spark, spans)
         if not registry:
             return
         tables = ensure_tables(lake_root, registry, n_buckets=n_buckets)
-        stage_and_apply(spark, batch_df,
+        stage_and_apply(spark, spans,
                         os.path.join(lake_root, f".stream-batch-{batch_id}"),
                         registry, tables,
                         f"stream-{checkpoint_dir}-{batch_id}",
@@ -161,5 +184,5 @@ def stream_apply_multi(spark: SparkSession, dump_dir: str, lake_root: str,
             on_batch(batch_id, {t: tbl.current_snapshot_id()
                                 for t, tbl in tables.items()})
 
-    return _start(spark, dump_dir, checkpoint_dir, apply_batch,
+    return _start(spark, dump_dir, checkpoint_dir, apply_spans,
                   available_now, processing_interval)

@@ -108,7 +108,7 @@ def test_empty_staged_batch_commits(spark, dump, tmp_path):
     """A batch of only statement/DDL transactions stages ZERO row events
     (a partitioned parquet dir with no part files): every table must
     still commit the batch id via an empty merge instead of crashing on
-    schema inference."""
+    schema inference, and leave no data behind."""
     import os
 
     from binlog_spark.cdc.multi import (apply_staged_batch, ensure_tables,
@@ -123,6 +123,9 @@ def test_empty_staged_batch_commits(spark, dump, tmp_path):
                        partial_tables=set())
     for t in tables.values():
         assert "empty-batch" in t.committed_batch_ids()
+        # the empty write names no file, so it must leave no commit dir
+        # behind (expire_snapshots only removes dirs snapshots name)
+        assert os.listdir(t.data_dir) == []
 
 
 def test_table_upserts_minimal_unit(spark, dump):

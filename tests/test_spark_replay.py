@@ -214,7 +214,7 @@ def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
             third["stats"]["data_files_written"]) == (0, 0)
     assert len(os.listdir(table.data_dir)) == n_dirs
     assert not [d for d in os.listdir(table.data_dir)
-                if d.startswith(".staging-")]
+                if d.startswith("staging-")]
 
 
 def test_incremental_merge_runs_four_jobs(spark, tmp_path):
@@ -318,3 +318,71 @@ def test_lineage_counts_reach_the_snapshot(spark, tmp_path):
                 got[k] += snap["stats"][k]
     assert n_batches > 1
     assert got == want
+
+
+def _write_stage_tasks(sc, group: str) -> int:
+    """Tasks of the result stage of a job group's last job — the stage
+    that writes the bucket files."""
+    st = sc.statusTracker()
+    job = st.getJobInfo(max(st.getJobIdsForGroup(group)))
+    return st.getStageInfo(max(job.stageIds)).numTasks
+
+
+def test_bucket_writes_sized_by_cores(spark, tmp_path):
+    """Both bucket writes (empty table, touched-bucket rewrite) run at
+    most defaultParallelism tasks, and still write one file per touched
+    bucket."""
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    n_buckets = 32
+    assert n_buckets > cores
+    table = LakeTable(str(tmp_path / "lake_tasks"), n_buckets=n_buckets)
+    table.create()
+    batches = [
+        [("r", f"p{i}", "c0", "py", "v0", "I", "bin.000001", 100 + i, 0)
+         for i in range(400)],
+        [("r", f"p{i}", "c1", "py", "v1", "U", "bin.000002", 100 + i, 0)
+         for i in range(0, 400, 3)]]
+    for n, rows in enumerate(batches):
+        group = f"bucket-write-{tmp_path.name}-{n}"
+        sc.setJobGroup(group, "merge")
+        try:
+            snap = table.merge(spark, _merge_batch(spark, rows),
+                               batch_id=f"b{n}")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        st = snap["stats"]
+        assert st["touched_buckets"] > cores
+        assert st["data_files_written"] == st["touched_buckets"]
+        assert all(len(snap["buckets"][str(b)]) == 1
+                   for b in range(n_buckets) if str(b) in snap["buckets"])
+        assert _write_stage_tasks(sc, group) <= cores
+    got = {(r.repo, r.path): r.commit for r in table.read(spark).collect()}
+    assert got == {("r", f"p{i}"): "c1" if i % 3 == 0 else "c0"
+                   for i in range(400)}
+
+
+def test_expire_removes_dropped_commit_dirs(spark, dump_dir, oracle_digest,
+                                            tmp_path):
+    """After expire_snapshots(keep_last=1) the data dir holds only the
+    commit dirs the retained snapshot references — a dropped snapshot's
+    commit dir goes with its Spark commit markers — while a dir no
+    snapshot names (a live writer's output) survives."""
+    import os
+    root = str(tmp_path / "lake_expire")
+    n_chunks = chunks_df(spark, dump_dir).count()
+    table = replay(spark, dump_dir, root, n_buckets=8,
+                   chunks_per_batch=-(-n_chunks // 3))
+    assert len(table.snapshots()) == 4  # create + 3 batches
+    live_writer = os.path.join(table.data_dir, "0123456789ab", "_temporary")
+    os.makedirs(live_writer)
+    table.expire_snapshots(keep_last=1)
+    kept = table.snapshot()
+    commits = {os.path.dirname(os.path.dirname(f))
+               for fl in kept["buckets"].values() for f in fl}
+    left = {os.path.join(table.data_dir, d)
+            for d in os.listdir(table.data_dir)}
+    assert left - commits == {os.path.dirname(live_writer)}
+    assert os.path.isdir(live_writer)
+    assert state_fingerprint(table.read(spark)) == oracle_digest
