@@ -219,8 +219,8 @@ def table_upserts(staged: DataFrame, columns: list[str], pk: list[str],
     keys; then a single-pass packed-order argmax (see the winner-search
     comment below).
 
-    ``broadcast_winners`` is accepted for API compatibility; the
-    single-pass argmax has no separate winner set to broadcast."""
+    ``broadcast_winners`` is accepted and ignored: the single-pass
+    argmax has no separate winner set to broadcast."""
     payload = [c for c in columns if c not in pk]
     a_cols = [f"_a_{c}" for c in columns]
     b_cols = [f"_b_{c}" for c in pk]
@@ -313,7 +313,10 @@ def table_upserts_minimal(staged: DataFrame, columns: list[str],
     present and the before image otherwise (the before/WHERE image always
     carries the pk).  Output: one row per touched key plus the patch
     metadata LakeTable.merge consumes — ``present_cols`` (csv of resolved
-    REAL column names) and ``base_{pk}`` chain-origin keys."""
+    REAL column names) and ``base_{pk}`` chain-origin keys.
+
+    ``broadcast_winners`` is accepted and ignored: the per-column
+    reduction has no separate winner set to broadcast."""
     from .pipeline import _minimal_core, with_key_change_tombstones
 
     payload = [c for c in columns if c not in pk]
@@ -364,7 +367,6 @@ def table_upserts_minimal(staged: DataFrame, columns: list[str],
     # the tombstone are inert (the melt excludes op='D')
     ev = with_key_change_tombstones(ev)
     up = _minimal_core(ev, [P + c for c in payload], F.col,
-                       broadcast_winners=broadcast_winners,
                        wide_order=wide_order)
 
     karr = F.from_json(F.col("repo"), "array<string>")
@@ -475,7 +477,8 @@ def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
     Tables in ``partial_tables`` — the (schema, table) pairs with
     MINIMAL (partial) row images that stage_events observed during the
     staging write — route to the per-column reduction; FULL tables keep
-    the cheap row-level winner search."""
+    the cheap row-level winner search.  ``broadcast_winners`` is accepted
+    and ignored: neither reduction has a winner set to broadcast."""
 
     def apply_table(item) -> None:
         (sch, tbl), t = item
@@ -501,8 +504,7 @@ def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
                    else table_upserts)
         up = upserts(spark.read.schema(_STAGED_SCHEMA).parquet(part),
                      info["columns"], pk,
-                     info["types"], broadcast_winners=broadcast_winners,
-                     wide_order=wide_order)
+                     info["types"], wide_order=wide_order)
         t.merge(spark, up, batch_id=bid, offsets=offsets)
 
     # per-table applies are independent (own lake roots, own
@@ -522,7 +524,6 @@ def apply_staged_batch(spark: SparkSession, staging: str, registry: dict,
 
 def stage_and_apply(spark: SparkSession, spans: list[tuple], staging: str,
                     registry: dict, tables: dict, bid: str, *,
-                    broadcast_winners: bool | None,
                     wide_order: bool) -> None:
     """One multi-table batch of chunk spans — the body batch replay and
     the streaming tail share: ONE generic decode, sized and planned by
@@ -530,14 +531,12 @@ def stage_and_apply(spark: SparkSession, spans: list[tuple], staging: str,
     per-table reduction reads only its own partition dirs, then the
     per-table apply committing the batch's offsets; the staging dir is
     removed afterwards."""
-    bw, parts, offsets = batch_plan(spark, spans, GENERIC_SPAN_TARGET,
-                                    broadcast_winners)
+    parts, offsets = batch_plan(spark, spans, GENERIC_SPAN_TARGET)
     events = decode_changes_vals(spans_df(spark, spans), partitions=parts)
     partials = stage_events(events, staging,
                             est_bytes=sum(int(s[3]) for s in spans))
     apply_staged_batch(spark, staging, registry, tables, bid,
                        offsets=offsets,
-                       broadcast_winners=bw,
                        wide_order=wide_order,
                        partial_tables=partials)
     shutil.rmtree(staging, ignore_errors=True)
@@ -546,7 +545,6 @@ def stage_and_apply(spark: SparkSession, spans: list[tuple], staging: str,
 def replay_generic(spark: SparkSession, dump_dir: str, lake_root: str, *,
                    chunks_per_batch: int | None = None,
                    n_buckets: int = 8,
-                   broadcast_winners: bool | None = None,
                    wide_order: bool | None = None) -> dict:
     """Replay a multi-table dump into one lake table per source table,
     with TYPED lake columns mapped from each TABLE_MAP's column types.
@@ -556,10 +554,12 @@ def replay_generic(spark: SparkSession, dump_dir: str, lake_root: str, *,
     mid-batch (a crash between two tables' merges re-runs the batch; the
     already-committed table skips it).
 
-    ``broadcast_winners`` and ``wide_order``: None derives them the way
-    cdc.replay.replay does — per batch from its input bytes
-    (cdc.replay.batch_plan), and from the manifest's ``max_tx_rows``
-    (decoder.chunks.manifest_wide_order)."""
+    Every table reduces in one pass at every batch size: FULL tables
+    with the packed-order argmax (table_upserts), MINIMAL tables with
+    the per-column reduction (table_upserts_minimal).
+
+    ``wide_order``: None derives it the way cdc.replay.replay does, from
+    the manifest's ``max_tx_rows`` (decoder.chunks.manifest_wide_order)."""
     if wide_order is None:
         wide_order = manifest_wide_order(dump_dir)
     all_chunks = [tuple(r) for r in chunks_df(spark, dump_dir).collect()]
@@ -575,6 +575,5 @@ def replay_generic(spark: SparkSession, dump_dir: str, lake_root: str, *,
         stage_and_apply(spark, spans,
                         os.path.join(lake_root, f".batch-{bid}"),
                         registry, tables, bid,
-                        broadcast_winners=broadcast_winners,
                         wide_order=wide_order)
     return tables

@@ -123,6 +123,11 @@ def last_writer_wins(events: DataFrame, *,
                      wide_order: bool = False) -> DataFrame:
     """Reduce the change stream to one winning record per (repo, path).
 
+    Every entry point (replay, the streaming tail, bench.py) takes the
+    argmax plan (no ``key_events``) at every batch size.  The keyed plan
+    stays only for perfbench's traced single-table pass, which still
+    passes ``key_events`` and ``broadcast_winners``.
+
     Two plans, chosen by whether a cheap key-only probe exists:
 
     With ``key_events`` (a key-only decode of the same chunks,
@@ -205,9 +210,7 @@ def reduce_changes(events: DataFrame, *,
 
 def reduce_changes_minimal(events: DataFrame,
                            extra_names: list[str] | None = None,
-                           *, broadcast_winners: bool = True,
-                           driver_closure_cap: int | None = None,
-                           key_events: DataFrame | None = None,
+                           *, key_events: DataFrame | None = None,
                            wide_order: bool = False
                            ) -> DataFrame:
     """Reduction for streams with MINIMAL row images: partial after-images
@@ -227,10 +230,10 @@ def reduce_changes_minimal(events: DataFrame,
     at the OLD key (the physical row keeps them in MySQL): events that
     precede a move-out are remapped to the chain's final key.  The move
     EDGE set (one row per key-moving update — tiny vs the stream) is
-    closed exactly on the driver for batches up to
-    ``driver_closure_cap`` edges (chains of any length, cycle-checked);
-    a >100k-edge batch falls back to the distributed time-windowed edge
-    composition (chains up to 15 in-batch hops, no driver state), and
+    closed exactly on the driver for batches up to DRIVER_CLOSURE_CAP
+    edges (chains of any length, cycle-checked); a larger batch falls
+    back to the distributed time-windowed edge composition (plain
+    joins, composed until convergence, no driver state), and
     the reduced row carries ``base_repo/base_path``
     so the MERGE can coalesce from the origin row (whose bucket is always
     touched — its own tombstone stages there).
@@ -267,11 +270,6 @@ def reduce_changes_minimal(events: DataFrame,
     order (true for replay and the streaming tail; idempotent re-delivery
     of the same batch is safe).
 
-    ``broadcast_winners``: with the single-pass reduction this only
-    controls the >100k-edge distributed key-move closure's join strategy
-    (the per-key winner sets it used to broadcast no longer exist as
-    separate frames); kept for API compatibility.
-
     ``key_events``: optionally a cheap key-only decode of the same
     chunks (decoder.kernel.decode_keys) — the key-move EDGE probe runs
     on it instead of the full decode, so payload bytes are decoded
@@ -288,16 +286,12 @@ def reduce_changes_minimal(events: DataFrame,
         return F.get_json_object("extra_json", f"$.{c}")
 
     return _minimal_core(good, payload, value_of,
-                         broadcast_winners=broadcast_winners,
-                         driver_closure_cap=driver_closure_cap,
                          key_good=key_good, wide_order=wide_order)
 
 
-#: batches below this many bytes of binlog input take the shuffle-join
-#: winner plan (one job, no broadcast-checkpoint materializations);
-#: larger batches broadcast the per-key winner sets so the payload
-#: stream is never re-shuffled.  Data-size derived, not core-count
-#: derived, so the same rule holds on a cluster.
+#: the byte rule perfbench's traced single-table pass uses to pick the
+#: keyed plan's winner join (broadcast at or above this much binlog
+#: input).  No entry point reads it: every FULL batch takes the argmax.
 BROADCAST_WINNERS_MIN_BYTES = 256 << 20
 
 #: key-move edge sets at or below this size are closed on the driver
@@ -391,9 +385,7 @@ def _close_moves_driver(edge_rows: list) -> tuple[list, list, list]:
 
 
 def _minimal_core(good: DataFrame, payload: list[str], value_of,
-                  *, broadcast_winners: bool = True,
-                  driver_closure_cap: int | None = None,
-                  key_good: DataFrame | None = None,
+                  *, key_good: DataFrame | None = None,
                   wide_order: bool = False) -> DataFrame:
     """Schema-generic per-column MINIMAL reduction (semantics documented
     on reduce_changes_minimal).  ``good`` is the quarantined, tombstoned
@@ -411,7 +403,6 @@ def _minimal_core(good: DataFrame, payload: list[str], value_of,
     The winner argmaxes compare the ``(_pos, _ord)`` struct
     lexicographically, which is order-type agnostic — narrow (long) and
     wide (decimal) share the same single-pass code."""
-    hint = F.broadcast if broadcast_winners else (lambda df: df)
     # NO persist of the decoded stream: a payload-string columnar cache
     # build costs more than recomputing the decode (measured round 1 and
     # again round 4 — 153 core-sec for a 40k-change batch).  The stream
@@ -454,16 +445,14 @@ def _minimal_core(good: DataFrame, payload: list[str], value_of,
     # spark.driver.maxResultSize (its rows are a few dozen bytes) and is
     # discarded immediately; a batch so large that even the collect is
     # refused routes to the distributed arm via the size error.
-    if driver_closure_cap is None:
-        driver_closure_cap = DRIVER_CLOSURE_CAP
     try:
         probe = edges.collect()
         n_edges = len(probe)
     except Exception as e:  # result-size refusal only; real errors re-raise
         if "maxResultSize" not in str(e):
             raise
-        probe, n_edges = [], driver_closure_cap + 1
-    if n_edges > driver_closure_cap:
+        probe, n_edges = [], DRIVER_CLOSURE_CAP + 1
+    if n_edges > DRIVER_CLOSURE_CAP:
         probe = []
         # the distributed composition below references the edge set once
         # per hop round: truncate the plan so each reference doesn't
@@ -481,7 +470,7 @@ def _minimal_core(good: DataFrame, payload: list[str], value_of,
         remap = min_in = origin = None
         ev = (ev.withColumn("_in", F.lit(None).cast(ord_type))
               .withColumn("_dead", F.lit(False)))
-    elif n_edges <= driver_closure_cap:
+    elif n_edges <= DRIVER_CLOSURE_CAP:
         from ..session import local_df
         remap_rows, min_in_rows, origin_rows = _close_moves_driver(probe)
         remap = F.broadcast(local_df(
@@ -514,7 +503,9 @@ def _minimal_core(good: DataFrame, payload: list[str], value_of,
         # bound below only trips on a violated invariant, never on a
         # legal stream.  (Chains of any length are also handled exactly
         # on the driver path above; this arm only runs for >100k-edge
-        # batches.)
+        # batches.)  Its joins carry no broadcast hint: the arm exists
+        # because the edge set is too big for the driver; AQE still
+        # broadcasts a side that turns out small.
         fin = edges.select("f_r", "f_p", "lo_ord", "m_ord", "t_r", "t_p",
                            F.col("m_ord").alias("in_ord"))
         hop = edges.select(F.col("f_r").alias("h_f_r"),
@@ -533,7 +524,7 @@ def _minimal_core(good: DataFrame, payload: list[str], value_of,
         rounds = 0
         while True:
             for _ in range(14):
-                fin = (fin.join(hint(hop), _hop_cond(), "left")
+                fin = (fin.join(hop, _hop_cond(), "left")
                        .select("f_r", "f_p", "lo_ord", "m_ord",
                                F.coalesce("h_t_r", "t_r").alias("t_r"),
                                F.coalesce("h_t_p", "t_p").alias("t_p"),
@@ -541,7 +532,7 @@ def _minimal_core(good: DataFrame, payload: list[str], value_of,
             rounds += 14
             # truncate the 14-join lineage before probing/continuing
             fin = fin.localCheckpoint(eager=False)
-            if fin.join(hint(hop), _hop_cond(), "inner").isEmpty():
+            if fin.join(hop, _hop_cond(), "inner").isEmpty():
                 break
             # a legal chain is bounded by the edge count (each hop
             # strictly raises in_ord and consumes one window), so the
@@ -569,7 +560,7 @@ def _minimal_core(good: DataFrame, payload: list[str], value_of,
         mt = moves.select(F.col("t_r").alias("mt_r"),
                           F.col("t_p").alias("mt_p"),
                           F.col("m_ord").alias("mt_ord"))
-        remap = (remap.join(hint(mt),
+        remap = (remap.join(mt,
                             (F.col("mt_r") == F.col("r_r"))
                             & (F.col("mt_p") == F.col("r_p"))
                             & (F.col("mt_ord") > F.col("lo_ord"))
@@ -580,18 +571,17 @@ def _minimal_core(good: DataFrame, payload: list[str], value_of,
                       F.first("in_ord").alias("in_ord"),
                       F.first("lo_ord").alias("lo_ord"),
                       F.max("mt_ord").alias("arr_ord")))
-        remap = hint(remap)
         # first arrival per final key: native events before it belong to
         # the key's prior row generation (the move-in proves it was
         # deleted)
-        min_in = hint(fin.groupBy(F.col("t_r").alias("n_r"),
-                                  F.col("t_p").alias("n_p"))
-                      .agg(F.min("in_ord").alias("_min_in")))
+        min_in = (fin.groupBy(F.col("t_r").alias("n_r"),
+                             F.col("t_p").alias("n_p"))
+                  .agg(F.min("in_ord").alias("_min_in")))
         # origin per final key: the chain start of the LATEST arrival (an
         # earlier chain at the same key is a dead generation); the start
         # is the winning chain's earliest move-out window
         win = fin.groupBy("t_r", "t_p").agg(F.max("in_ord").alias("in_ord"))
-        origin = hint(
+        origin = (
             fin.join(win, on=["t_r", "t_p", "in_ord"], how="inner")
             .groupBy(F.col("t_r").alias("repo"),
                      F.col("t_p").alias("path"))

@@ -28,9 +28,8 @@ from ..decoder.chunks import (DECODE_SPAN_TARGET, chunks_df,
                               spans_df)
 from ..decoder.kernel import decode_changes, decode_keys
 from ..lake.table import LakeTable
-from .pipeline import (BROADCAST_WINNERS_MIN_BYTES, flatten_extras,
-                       reduce_changes, reduce_changes_minimal,
-                       scan_extra_columns)
+from .pipeline import (flatten_extras, reduce_changes,
+                       reduce_changes_minimal, scan_extra_columns)
 
 
 def _batch_id(dump_dir: str, idx: int, spans: list) -> str:
@@ -45,25 +44,46 @@ def plan_batches(chunks: list[tuple], chunks_per_batch: int | None) -> list[list
             for i in range(0, len(chunks), chunks_per_batch)]
 
 
-def batch_plan(spark: SparkSession, spans: list[tuple], target: int,
-               broadcast_winners: bool | None
-               ) -> tuple[bool, int | None, dict]:
+def batch_plan(spark: SparkSession, spans: list[tuple], target: int
+               ) -> tuple[int | None, dict]:
     """The per-batch settings every chunk-span entry point derives from
-    its batch, as ``(broadcast_winners, partitions, offsets)``: the
-    winner plan (broadcast the per-key winner sets only once the batch
-    holds >= BROADCAST_WINNERS_MIN_BYTES of binlog input, unless the
-    caller fixed ``broadcast_winners`` to a bool), the decode partition
-    count for the decoder's bytes-per-task ``target``
+    its batch, as ``(partitions, offsets)``: the decode partition count
+    for the decoder's bytes-per-task ``target``
     (decoder.chunks.decode_parallelism) and the commit offsets — the end
     of the batch's last chunk in its newest file."""
-    if broadcast_winners is None:
-        broadcast_winners = (sum(int(s[3]) for s in spans)
-                             >= BROADCAST_WINNERS_MIN_BYTES)
     last_file = max(s[1] for s in spans)
     last_end = max(s[2] + s[3] for s in spans if s[1] == last_file)
-    return (broadcast_winners,
-            decode_parallelism(spark, spans, target=target),
+    return (decode_parallelism(spark, spans, target=target),
             {"log_file": last_file, "next_pos": int(last_end)})
+
+
+def single_table_upserts(spark: SparkSession, spans: list[tuple],
+                         extra_names: list[str], *, minimal_images: bool,
+                         wide_order: bool
+                         ) -> tuple[DataFrame, DataFrame, dict]:
+    """The single-table batch body replay and the streaming tail share,
+    as ``(events, upserts, offsets)``: ONE payload decode of the batch's
+    chunk spans, reduced to one upsert row per touched key.
+
+    FULL images pick each key's winner in one ``max(struct(_ord, row))``
+    argmax (cdc.pipeline.last_writer_wins without a key probe) and
+    flatten ``extra_names`` into real columns.  MINIMAL images take the
+    per-column reduction (cdc.pipeline.reduce_changes_minimal), whose
+    key-move edge probe runs on a cheap key-only decode of the same
+    spans.  The caller discovers ``extra_names`` from the batch's
+    TABLE_MAPs, and owns the batch-id skip, lineage and MERGE."""
+    parts, offsets = batch_plan(spark, spans, DECODE_SPAN_TARGET)
+    cdf = spans_df(spark, spans)
+    events = decode_changes(cdf, partitions=parts)
+    if minimal_images:
+        upserts = reduce_changes_minimal(
+            events, extra_names=extra_names,
+            key_events=decode_keys(cdf, partitions=parts),
+            wide_order=wide_order)
+    else:
+        upserts = reduce_changes(events, wide_order=wide_order)
+        upserts, _new_cols = flatten_extras(upserts, names=extra_names)
+    return events, upserts, offsets
 
 
 def write_lineage(events: DataFrame, table_root: str, batch_id: str) -> dict:
@@ -91,9 +111,12 @@ def replay(spark: SparkSession, dump_dir: str, table_root: str, *,
            compact_every: int | None = None,
            compact_tombstone_ratio: float | None = None,
            minimal_images: bool = False,
-           broadcast_winners: bool | None = None,
            wide_order: bool | None = None) -> LakeTable:
     """Replay a dump dir into a lake table; safe to re-run (idempotent).
+
+    Each batch runs the body the streaming tail runs
+    (single_table_upserts): one payload decode, and for FULL images one
+    ``max(struct(_ord, row))`` argmax per key at every batch size.
 
     ``compact_every`` / ``compact_tombstone_ratio``: retention policy —
     after each committed batch the table compacts when N commits have
@@ -104,14 +127,6 @@ def replay(spark: SparkSession, dump_dir: str, table_root: str, *,
     binlog_row_image=MINIMAL — partial after-images are column PATCHES;
     the reduction runs per column (reduce_changes_minimal) and the MERGE
     coalesces unresolved columns from the existing rows.
-
-    ``broadcast_winners``: None (default) auto-selects per batch — the
-    per-key winner sets broadcast only when the batch is large enough
-    (>= BROADCAST_WINNERS_MIN_BYTES of binlog input) that re-shuffling
-    the payload stream would dominate; a small batch takes the shuffle
-    plan, which runs as one job with no checkpoint materializations
-    (measured ~30% faster at <=76 MB batches, identical fingerprints;
-    the broadcast plan stays ~2x faster at 1.5 GB).
 
     ``wide_order``: DECIMAL order key with no 32767 seq clamp, for
     single transactions beyond 32k rows on one key (pack_ord wide).
@@ -135,29 +150,13 @@ def replay(spark: SparkSession, dump_dir: str, table_root: str, *,
         bid = _batch_id(dump_dir, i, [s[1:] for s in spans])
         if bid in committed:
             continue
-        cdf = spans_df(spark, spans)
-        bw, parts, offsets = batch_plan(spark, spans, DECODE_SPAN_TARGET,
-                                        broadcast_winners)
-        events = decode_changes(cdf, partitions=parts)
-        # late materialization: the FULL winner search and the MINIMAL
-        # key-move edge probe run on the cheap key-only decode, so the
-        # payload decode is consumed once
-        keys = decode_keys(cdf, partitions=parts)
         # schema evolution: extras observed in this batch become real
         # columns; the MERGE widens the table schema accordingly.  Names
-        # come from a driver-side TABLE_MAP scan — never from executing
-        # the pipeline.
-        extra_names = scan_extra_columns(spans)
-        if minimal_images:
-            upserts = reduce_changes_minimal(
-                events, extra_names=extra_names,
-                broadcast_winners=bw, key_events=keys,
-                wide_order=wide_order)
-        else:
-            upserts = reduce_changes(events, key_events=keys,
-                                     broadcast_winners=bw,
-                                     wide_order=wide_order)
-            upserts, _new_cols = flatten_extras(upserts, names=extra_names)
+        # come from a driver-side TABLE_MAP scan of the batch's bounded
+        # chunks — never from executing the pipeline.
+        events, upserts, offsets = single_table_upserts(
+            spark, spans, scan_extra_columns(spans),
+            minimal_images=minimal_images, wide_order=wide_order)
         # lineage re-runs the decode (cheap, embarrassingly parallel)
         # rather than caching the event stream — a DataFrame cache build
         # costs more than a second decode pass at scale

@@ -622,14 +622,21 @@ class LakeTable:
 
         A dropped snapshot's commit directory (``data/<commit>``, the
         parent of its ``bucket=`` dirs) goes with it once no retained
-        snapshot references a file under it.  Directories no snapshot
-        names — a live writer's output or staging dir — are left alone."""
+        snapshot references a file under it.
+
+        A ``data/`` entry no snapshot names is a writer's output that
+        never committed.  It is swept once its mtime is older than the
+        oldest retained snapshot's ``committed_at``: its writer read
+        CURRENT before that commit, so its own commit must fail the
+        parent check (a killed writer's dir would otherwise stay for
+        good).  A newer one — a live writer's output or staging dir —
+        is left alone."""
         snaps = self.snapshots()
-        if len(snaps) <= keep_last:
-            return []
         drop, keep = snaps[:-keep_last], snaps[-keep_last:]
         live = {f for s in keep for fl in s["buckets"].values() for f in fl}
         live_commits = {_commit_dir(f) for f in live}
+        named = {os.path.basename(_commit_dir(f)) for s in snaps
+                 for fl in s["buckets"].values() for f in fl}
         removed = []
         dropped_commits = set()
         for s in drop:
@@ -652,6 +659,16 @@ class LakeTable:
                         and not any(n.endswith(".parquet")
                                     for n in os.listdir(subf)):
                     shutil.rmtree(subf, ignore_errors=True)
+        oldest = keep[0].get("committed_at") if keep else None
+        if oldest is None:
+            return removed
+        for name in sorted(os.listdir(self.data_dir)):
+            d = os.path.join(self.data_dir, name)
+            if (name not in named and os.path.isdir(d)
+                    and os.path.getmtime(d) < oldest):
+                removed += [os.path.join(p, n) for p, _, ns in os.walk(d)
+                            for n in ns if n.endswith(".parquet")]
+                shutil.rmtree(d, ignore_errors=True)
         return removed
 
 

@@ -32,11 +32,9 @@ from pyspark.sql import functions as F
 
 from ..cdc.multi import (ensure_tables, scan_table_registry_spans,
                          stage_and_apply)
-from ..cdc.pipeline import (flatten_extras, reduce_changes,
-                            reduce_changes_minimal, registry_extra_columns)
-from ..cdc.replay import batch_plan
-from ..decoder.chunks import DECODE_SPAN_TARGET, manifest_wide_order, spans_df
-from ..decoder.kernel import decode_changes, decode_keys
+from ..cdc.pipeline import registry_extra_columns
+from ..cdc.replay import single_table_upserts
+from ..decoder.chunks import manifest_wide_order
 from ..lake.table import LakeTable
 
 _BINARY_FILE_SCHEMA = ("path string, modificationTime timestamp, "
@@ -92,7 +90,6 @@ def stream_apply(spark: SparkSession, dump_dir: str, table_root: str,
                  available_now: bool = True,
                  processing_interval: str = "5 seconds",
                  minimal_images: bool = False,
-                 broadcast_winners: bool = True,
                  on_batch: Callable[[int, dict], None] | None = None):
     """Tail a staging dir into a lake table via foreachBatch MERGE.
 
@@ -101,11 +98,11 @@ def stream_apply(spark: SparkSession, dump_dir: str, table_root: str,
     reference's blocking serverID!=0 mode, /root/reference/doc.go:23).
     ``minimal_images``: the source logs binlog_row_image=MINIMAL —
     partial images patch per column (reduce_changes_minimal + the
-    patch-aware MERGE).  ``broadcast_winners`` only affects that MINIMAL
-    branch: a FULL-image micro-batch decodes its spans once and picks
-    each key's winner in one ``max(struct(_ord, row))`` pass
-    (cdc.pipeline.last_writer_wins without a key probe).  The order key
-    is the one batch replay uses: wide when the dump's manifest records
+    patch-aware MERGE).  Each micro-batch runs batch replay's body
+    (cdc.replay.single_table_upserts): a FULL-image micro-batch decodes
+    its spans once and picks each key's winner in one
+    ``max(struct(_ord, row))`` pass.  The order key is the one batch
+    replay uses: wide when the dump's manifest records
     a transaction beyond the 32767-row seq clamp
     (decoder.chunks.manifest_wide_order).  Returns the StreamingQuery.
     """
@@ -114,27 +111,16 @@ def stream_apply(spark: SparkSession, dump_dir: str, table_root: str,
     wide_order = manifest_wide_order(dump_dir)
 
     def apply_spans(spans: list, batch_id: int) -> None:
-        bw, parts, offsets = batch_plan(spark, spans, DECODE_SPAN_TARGET,
-                                        broadcast_winners)
-        cdf = spans_df(spark, spans)
-        events = decode_changes(cdf, partitions=parts)
-        # schema discovery from the batch's TABLE_MAPs (a driver header
-        # hop at micro-batch sizes) — a name-less flatten_extras would
+        # schema discovery from the batch's TABLE_MAPs: a driver header
+        # hop over whole-file spans up to REGISTRY_DRIVER_MAX_BYTES, a
+        # distributed scan above — a name-less flatten_extras would
         # EXECUTE the upsert pipeline once per micro-batch for a
         # distinct-key probe
         extra_names = registry_extra_columns(
             scan_table_registry_spans(spark, spans))
-        if minimal_images:
-            upserts = reduce_changes_minimal(
-                events, extra_names=extra_names, broadcast_winners=bw,
-                key_events=decode_keys(cdf, partitions=parts),
-                wide_order=wide_order)
-        else:
-            # micro-batches are a few MB: the keyed plan's extra key-only
-            # decode, winner checkpoint and join-back cost more than the
-            # one argmax shuffle they avoid
-            upserts = reduce_changes(events, wide_order=wide_order)
-            upserts, _ = flatten_extras(upserts, names=extra_names)
+        _events, upserts, offsets = single_table_upserts(
+            spark, spans, extra_names, minimal_images=minimal_images,
+            wide_order=wide_order)
         snap = table.merge(spark, upserts,
                            batch_id=f"stream-{checkpoint_dir}-{batch_id}",
                            offsets=offsets)
@@ -150,7 +136,6 @@ def stream_apply_multi(spark: SparkSession, dump_dir: str, lake_root: str,
                        n_buckets: int = 8,
                        available_now: bool = True,
                        processing_interval: str = "5 seconds",
-                       broadcast_winners: bool = True,
                        on_batch: Callable[[int, dict], None] | None = None):
     """Tail a MULTI-TABLE staging dir: one stream demultiplexed into one
     lake table per source table (the streaming counterpart of
@@ -178,7 +163,6 @@ def stream_apply_multi(spark: SparkSession, dump_dir: str, lake_root: str,
                         os.path.join(lake_root, f".stream-batch-{batch_id}"),
                         registry, tables,
                         f"stream-{checkpoint_dir}-{batch_id}",
-                        broadcast_winners=broadcast_winners,
                         wide_order=wide_order)
         if on_batch is not None:
             on_batch(batch_id, {t: tbl.current_snapshot_id()

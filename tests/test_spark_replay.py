@@ -72,6 +72,23 @@ def test_batched_replay_and_resume(spark, dump_dir, oracle_digest, tmp_path):
     assert offs == sorted(offs, key=lambda o: (o["log_file"], o["next_pos"]))
 
 
+def test_replay_full_image_decodes_once(spark, dump_dir, oracle_digest,
+                                        tmp_path, monkeypatch):
+    """A FULL-image replay batch picks winners with the single-pass
+    argmax the streaming tail runs: the key-only decode must never run,
+    and a multi-batch replay still matches the oracle."""
+    import binlog_spark.cdc.replay as R
+
+    def no_key_pass(*a, **kw):
+        raise AssertionError("FULL-image replay batch ran decode_keys")
+
+    monkeypatch.setattr(R, "decode_keys", no_key_pass)
+    table = replay(spark, dump_dir, str(tmp_path / "lake_once"),
+                   chunks_per_batch=20, n_buckets=8, lineage=False)
+    assert len(table.snapshots()) > 2
+    assert state_fingerprint(table.read(spark)) == oracle_digest
+
+
 def test_resume_from_partial(spark, dump_dir, oracle_digest, tmp_path):
     """Simulate a crash mid-replay: run only a prefix of batches, then
     resume with the full plan."""

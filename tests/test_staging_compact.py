@@ -229,3 +229,44 @@ def test_lost_merge_race_leaves_no_orphan_data(spark, tmp_path):
                   for s in winner.snapshots()
                   for fl in s["buckets"].values() for f in fl}
     assert set(os.listdir(data_dir)) == referenced
+
+
+def test_expire_sweeps_killed_writer_data(spark, tmp_path):
+    """A writer killed between its bucket write and its snapshot commit
+    leaves a ``data/<commit>`` dir no snapshot names.  Once it is older
+    than the oldest retained commit, ``expire_snapshots`` removes it; a
+    fresh unnamed dir (a live writer's output) stays, and so does every
+    dir a retained snapshot names."""
+    import os
+    import time
+
+    from binlog_spark.lake.table import LakeTable
+    cols = "repo string, path string, commit string, lang string, " \
+        "content string"
+
+    def batch(tag: str):
+        return spark.createDataFrame(
+            [("r", f"p{i}", tag, "py", tag) for i in range(40)], cols)
+
+    t = LakeTable(str(tmp_path / "killed"), n_buckets=4)
+    t.create()
+    t.merge(spark, batch("a"), batch_id="a")
+    killed = os.path.join(t.data_dir, "0000deadbeef")
+    os.makedirs(os.path.join(killed, "bucket=1"))
+    with open(os.path.join(killed, "bucket=1", "part-0.parquet"), "wb") as f:
+        f.write(b"PAR1")
+    old = time.time() - 3600
+    os.utime(killed, (old, old))
+    t.merge(spark, batch("b"), batch_id="b")
+    live = os.path.join(t.data_dir, "0000feedface", "_temporary")
+    os.makedirs(live)
+
+    removed = t.expire_snapshots(keep_last=1)
+    assert not os.path.exists(killed)
+    assert os.path.join(killed, "bucket=1", "part-0.parquet") in removed
+    assert os.path.isdir(live)
+    named = {os.path.relpath(f, t.data_dir).split(os.sep)[0]
+             for fl in t.snapshot()["buckets"].values() for f in fl}
+    assert set(os.listdir(t.data_dir)) == named | {"0000feedface"}
+    got = t.read(spark).groupBy("commit").count().collect()
+    assert [tuple(r) for r in got] == [("b", 40)]

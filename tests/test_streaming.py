@@ -45,12 +45,12 @@ def test_stream_full_image_batch_decodes_once(spark, dump_dir, tmp_path,
     """A FULL-image micro-batch reduces with the single-pass argmax: the
     key-only decode must never run, and the drain still matches the
     oracle."""
-    import binlog_spark.streaming.tail as tail
+    import binlog_spark.cdc.replay as R
 
     def no_key_pass(*a, **kw):
         raise AssertionError("FULL-image stream batch ran decode_keys")
 
-    monkeypatch.setattr(tail, "decode_keys", no_key_pass)
+    monkeypatch.setattr(R, "decode_keys", no_key_pass)
     want = oracle.state_digest(oracle.final_state(dump_dir))
     table = _run_drain(spark, dump_dir, str(tmp_path / "slake1"),
                        str(tmp_path / "sckpt1"))
