@@ -155,15 +155,20 @@ def reuse_dump(tmp_path_factory):
 
 
 def test_randomized_reuse_matches_oracle(spark, reuse_dump, tmp_path):
-    """Several small batches and the whole dump in one batch (the shape
-    the former no-broadcast case covered) reach the same oracle state."""
     want = oracle.state_digest(oracle.final_state(reuse_dump))
-    for chunks_per_batch in (6, None):
-        got, table = _replay_digest(spark, reuse_dump, tmp_path,
-                                    f"rr_lake_{chunks_per_batch}",
-                                    chunks_per_batch=chunks_per_batch)
-        assert len(table.snapshots()) > (2 if chunks_per_batch else 1)
-        assert got == want, chunks_per_batch
+    got, table = _replay_digest(spark, reuse_dump, tmp_path, "rr_lake",
+                                chunks_per_batch=6)
+    assert len(table.snapshots()) > 2
+    assert got == want
+
+
+def test_randomized_reuse_no_broadcast(spark, reuse_dump, tmp_path):
+    """The whole dump as one batch (the huge-batch shape that once needed
+    a shuffle-join escape hatch) must produce the identical digest."""
+    want = oracle.state_digest(oracle.final_state(reuse_dump))
+    got, _ = _replay_digest(spark, reuse_dump, tmp_path, "rrnb_lake",
+                            chunks_per_batch=None)
+    assert got == want
 
 
 def test_randomized_reuse_distributed_closure(spark, reuse_dump, tmp_path,

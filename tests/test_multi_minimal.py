@@ -63,17 +63,13 @@ def test_vals_decoder_emits_presence(spark, dump):
 
 def test_replay_minimal_matches_sequential_oracle(spark, dump,
                                                   oracle_state, tmp_path):
-    """Small batches and the larger ones the former shuffle-join case
-    covered reach the same sequential-oracle state."""
-    for chunks_per_batch in (8, 64):
-        lake = str(tmp_path / f"lake_{chunks_per_batch}")
-        tables = replay_generic(spark, dump, lake,
-                                chunks_per_batch=chunks_per_batch)
-        assert set(tables) == set(oracle_state)
-        for tkey, want in oracle_state.items():
-            got = _lake_state(spark, tables[tkey])
-            assert len(got) == len(want), (tkey, chunks_per_batch)
-            assert got == want, (tkey, chunks_per_batch)
+    lake = str(tmp_path / "lake")
+    tables = replay_generic(spark, dump, lake, chunks_per_batch=8)
+    assert set(tables) == set(oracle_state)
+    for tkey, want in oracle_state.items():
+        got = _lake_state(spark, tables[tkey])
+        assert len(got) == len(want), tkey
+        assert got == want, tkey
 
 
 def test_replay_minimal_is_idempotent(spark, dump, oracle_state, tmp_path):
@@ -84,6 +80,15 @@ def test_replay_minimal_is_idempotent(spark, dump, oracle_state, tmp_path):
     replay_generic(spark, dump, lake, chunks_per_batch=8)
     assert t.current_snapshot_id() == sid
     assert _lake_state(spark, t) == oracle_state[("inventory", "users")]
+
+
+def test_minimal_shuffle_winner_join(spark, dump, oracle_state, tmp_path):
+    """Large batches (64 chunks, the shape the former shuffle-join escape
+    hatch covered) must agree with the sequential oracle."""
+    lake = str(tmp_path / "lake3")
+    tables = replay_generic(spark, dump, lake, chunks_per_batch=64)
+    for tkey, want in oracle_state.items():
+        assert _lake_state(spark, tables[tkey]) == want, tkey
 
 
 def test_composite_pk_partial_key_move(spark, tmp_path):
